@@ -19,7 +19,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-_SQRT2 = 1.4142135623730951
+SQRT2 = 1.4142135623730951
 _LOG_SQRT_2PI = 0.9189385332046727  # log(sqrt(2*pi))
 
 
@@ -29,7 +29,21 @@ def erfc_expr(x: Column) -> Column:
     Fractional error < 1.2e-7 everywhere; exact symmetry handled.
     """
     z = F.abs(x)
-    t = F.lit(1.0) / (F.lit(1.0) + F.lit(0.5) * z)
+    return erfc_from_tail(x, erfc_tail_expr(z, erfc_t_expr(z)))
+
+
+def erfc_t_expr(z: Column) -> Column:
+    """``t = 1 / (1 + z / 2)`` of ``erfc_expr`` at ``z = |x|``."""
+    return F.lit(1.0) / (F.lit(1.0) + F.lit(0.5) * z)
+
+
+def erfc_tail_expr(z: Column, t: Column) -> Column:
+    """``erfc(z)`` for ``z = |x| >= 0``, from ``t = erfc_t_expr(z)``.
+
+    The Horner polynomial reads ``t`` nine times; a caller that projects
+    ``z`` and ``t`` as columns of their own generates them once per row
+    instead of inlining them at every use.
+    """
     # Horner-form polynomial in t
     poly = (
         F.lit(-1.26551223)
@@ -63,8 +77,12 @@ def erfc_expr(x: Column) -> Column:
             )
         )
     )
-    ans = t * F.exp(-z * z + poly)
-    return F.when(x >= 0, ans).otherwise(F.lit(2.0) - ans)
+    return t * F.exp(-z * z + poly)
+
+
+def erfc_from_tail(x: Column, tail: Column) -> Column:
+    """``erfc(x)`` from ``tail = erfc(|x|)``, by ``erfc(-x) = 2 - erfc(x)``."""
+    return F.when(x >= 0, tail).otherwise(F.lit(2.0) - tail)
 
 
 def norm_pdf_expr(x: Column, mu: Column | float = 0.0, sigma: Column | float = 1.0) -> Column:
@@ -73,19 +91,23 @@ def norm_pdf_expr(x: Column, mu: Column | float = 0.0, sigma: Column | float = 1
 
 
 def norm_logpdf_expr(x: Column, mu: Column | float = 0.0, sigma: Column | float = 1.0) -> Column:
-    z = (x - mu) / sigma
+    return norm_logpdf_z_expr((x - mu) / sigma, sigma)
+
+
+def norm_logpdf_z_expr(z: Column, sigma: Column | float = 1.0) -> Column:
+    """``norm_logpdf_expr`` from the standard score ``z = (x - mu) / sigma``."""
     return F.lit(-0.5) * z * z - F.lit(_LOG_SQRT_2PI) - F.log(F.lit(1.0) * sigma)
 
 
 def norm_sf_expr(x: Column, mu: Column | float = 0.0, sigma: Column | float = 1.0) -> Column:
     """Survival function P(X > x) = 0.5*erfc(z/sqrt(2))."""
     z = (x - mu) / sigma
-    return F.lit(0.5) * erfc_expr(z / F.lit(_SQRT2))
+    return F.lit(0.5) * erfc_expr(z / F.lit(SQRT2))
 
 
 def norm_cdf_expr(x: Column, mu: Column | float = 0.0, sigma: Column | float = 1.0) -> Column:
     z = (x - mu) / sigma
-    return F.lit(0.5) * erfc_expr(-z / F.lit(_SQRT2))
+    return F.lit(0.5) * erfc_expr(-z / F.lit(SQRT2))
 
 
 def norm_logsf_expr(x: Column, mu: Column | float = 0.0, sigma: Column | float = 1.0) -> Column:

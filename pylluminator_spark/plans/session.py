@@ -64,6 +64,10 @@ def _stage_poobah_mask(spark, sig, masks, threshold=0.05):
     return pb_mask
 
 
+def _stage_min_beads_masks(spark, sig, min_beads=1):
+    return min_beads_masks(sig, min_beads)
+
+
 def _stage_betas(spark, sig, include_out_of_band=False):
     meth, unmeth = meth_unmeth_exprs(include_out_of_band)
     return sig.select(
@@ -703,6 +707,14 @@ class MethylSession:
         without it the root is keyed by the signal's analyzed plan (see
         ``PipelineManifest.frame_source``).
 
+        The masks are the second root. When they are the min-beads masks
+        of the session's own signal (every ``from_idata`` session), they
+        are a ``masks`` stage over the stored signal, keyed by the signal
+        key and ``min_beads``: no run rescans the raw source for them, and
+        a rerun reads them by key. Any other masks table (after
+        ``add_mask`` or a mask builder, say) is keyed by its content,
+        which costs one aggregation over its lineage on every run.
+
         Returns ``(session, stage_refs)``: a new session whose signal /
         masks / betas come from the store (parquet-backed — no persist
         needed, the reuse points are on disk), plus the ``StageRef`` per
@@ -712,21 +724,36 @@ class MethylSession:
         cur = refs["signal"] = manifest.frame_source(
             "signal", self.signal, source_fingerprint
         )
-        # masks root: content-hashed (one small aggregate — masks are
-        # dimension-sized next to the signal), since an in-memory masks
-        # table has no lineage identity (frame_source docstring); the
+        # masks root. The min-beads masks of a ``from_idata`` session are
+        # a function of the signal, so they become a stage over the stored
+        # signal: a cold run derives them from that parquet instead of
+        # rescanning the raw source, and a rerun finds them by key with no
+        # job at all. Any other masks table has no lineage identity
+        # (frame_source docstring) and is keyed by its content, which costs
+        # one aggregation over the masks' whole lineage — for masks built
+        # on the raw signal, a rescan of the raw source — on every run; the
         # no-masks case gets a constant key
-        if self.masks is not None:
-            from pylluminator_spark.plans.manifest import content_fingerprint
-
-            masks_df = self.masks
-            masks_fp = content_fingerprint(masks_df)
+        if self.masks is not None and self.masks.sameSemantics(
+            min_beads_masks(self.signal, self.min_beads)
+        ):
+            masks_ref = refs["masks"] = manifest.stage(
+                "masks",
+                _stage_min_beads_masks,
+                [refs["signal"]],
+                {"min_beads": self.min_beads},
+            )
         else:
-            masks_df = mask_ops.empty_masks(self.spark)
-            masks_fp = "empty-masks-v1"
-        masks_ref = refs["masks"] = manifest.frame_source(
-            "masks", masks_df, masks_fp
-        )
+            if self.masks is not None:
+                from pylluminator_spark.plans.manifest import content_fingerprint
+
+                masks_df = self.masks
+                masks_fp = content_fingerprint(masks_df)
+            else:
+                masks_df = mask_ops.empty_masks(self.spark)
+                masks_fp = "empty-masks-v1"
+            masks_ref = refs["masks"] = manifest.frame_source(
+                "masks", masks_df, masks_fp
+            )
         if infer_channel:
             cur = refs["infer_channel"] = manifest.stage(
                 "infer_channel", _stage_infer_channel, [cur], {}

@@ -8,11 +8,14 @@ Spark-first decomposition of each kernel:
   with aggregations / grouped-map pandas UDFs producing tiny parameter
   tables, broadcast-joined back, and applied as column expressions;
 - the norm-exp convolution (reference stats.py:95-142) is pure column math
-  (normal pdf/sf via erfc) running in whole-stage codegen over every cell;
-- the ECDF behind pOOBAH (reference samples.py:1529-1607) is the
-  sort-merge-window formulation: union background + foreground values, one
-  window per (sample, channel) ordered by value, running count of background
-  rows — fully distributed, no driver-side vectors;
+  (normal pdf/sf via erfc) running in whole-stage codegen over every cell,
+  one projection per shared subexpression so each is generated once;
+- the ECDF behind pOOBAH (reference samples.py:1529-1607) is one scan and
+  one window: every signal row explodes into its foreground query values
+  and its background values, and one window per (sample, channel) ordered
+  by value gives the running count of background rows plus the partition's
+  background count and sum; the low-signal fallback prior (uniform 0..999)
+  has a closed-form ECDF — fully distributed, no driver-side vectors;
 - only the non-linear dye-bias fit (reference samples.py:1340-1427), whose
   state is a per-sample interpolation table over ~128k sorted intensities,
   uses a grouped-map pandas UDF per sample (bounded group size).
@@ -30,7 +33,13 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from pylluminator_spark.functions.stats import norm_logpdf_expr, norm_logsf_expr
+from pylluminator_spark.functions.stats import (
+    SQRT2,
+    erfc_from_tail,
+    erfc_t_expr,
+    erfc_tail_expr,
+    norm_logpdf_z_expr,
+)
 
 NON_UNIQUE_MASK_PATTERN = "(?i)(nonuniq|M_nonuniq|multi|M_mapping)"
 
@@ -410,42 +419,54 @@ def noob_fit_params(
     )
 
     is_t1 = F.col("type") == "I"
+    is_t2 = F.col("type") == "II"
     is_neg = (F.col("probe_type") == "ctl") & F.col("probe_id").rlike("(?i)negative")
     clean = ~F.col("_nonuniq")
+    on_g, on_r = F.col("channel") == "G", F.col("channel") == "R"
 
-    def _vals(df: DataFrame, ch: str, kind: str, cols: list[str]) -> DataFrame:
-        return df.select(
-            "sample",
-            F.lit(ch).alias("ch"),
-            F.lit(kind).alias("kind"),
-            F.explode(F.array(*cols)).alias("v"),
-        ).filter(F.col("v").isNotNull())
-
-    # Background: OOB cells (G-cells of R probes / R-cells of G probes)
-    bg_parts = [
-        _vals(work.filter(is_t1 & clean & (F.col("channel") == "R")), "G", "bg", ["mg", "ug"]),
-        _vals(work.filter(is_t1 & clean & (F.col("channel") == "G")), "R", "bg", ["mr", "ur"]),
+    # (rows, channel, kind, cells). Background: OOB cells (G-cells of R
+    # probes / R-cells of G probes) + negative controls; foreground:
+    # in-band type I + type II cells. A negative control that is also a
+    # type I probe counts twice, once per part.
+    parts = [
+        (is_t1 & clean & on_r, "G", "bg", ("mg", "ug")),
+        (is_t1 & clean & on_g, "R", "bg", ("mr", "ur")),
     ]
     if use_negative_controls:
-        neg = work.filter(is_neg)
-        bg_parts += [
-            _vals(neg, "G", "bg", ["mg", "ug"]),
-            _vals(neg, "R", "bg", ["mr", "ur"]),
-        ]
-    # Foreground: in-band type I + type II cells
-    fg_parts = [
-        _vals(work.filter(is_t1 & clean & (F.col("channel") == "G")), "G", "fg", ["mg", "ug"]),
-        _vals(work.filter(is_t1 & clean & (F.col("channel") == "R")), "R", "fg", ["mr", "ur"]),
-        _vals(work.filter((F.col("type") == "II") & clean), "G", "fg", ["mg"]),
-        _vals(work.filter((F.col("type") == "II") & clean), "R", "fg", ["ur"]),
+        parts += [(is_neg, "G", "bg", ("mg", "ug")), (is_neg, "R", "bg", ("mr", "ur"))]
+    parts += [
+        (is_t1 & clean & on_g, "G", "fg", ("mg", "ug")),
+        (is_t1 & clean & on_r, "R", "fg", ("mr", "ur")),
+        (is_t2 & clean, "G", "fg", ("mg",)),
+        (is_t2 & clean, "R", "fg", ("ur",)),
     ]
-    long = bg_parts[0]
-    for part in bg_parts[1:] + fg_parts:
-        long = long.unionByName(part)
+    # one scan: every row explodes into all of its parts' cells (NULL where
+    # the part does not apply), tagged with the part's index so the fit can
+    # read each vector part by part
+    cells = F.array(
+        *[
+            F.struct(
+                F.lit(i).alias("part"),
+                F.lit(ch).alias("ch"),
+                F.lit(kind).alias("kind"),
+                F.when(rows, F.col(c)).alias("v"),
+            )
+            for i, (rows, ch, kind, cols) in enumerate(parts)
+            for c in cols
+        ]
+    )
+    long = (
+        work.select("sample", F.explode(cells).alias("c"))
+        .select("sample", "c.*")
+        .filter(F.col("v").isNotNull())
+    )
 
     def _fit(pdf: pd.DataFrame) -> pd.DataFrame:
         out = []
         sample = pdf["sample"].iloc[0]
+        # part by part, scan order within a part: the Huber means sum each
+        # vector in this order, and float sums depend on it
+        pdf = pdf.sort_values("part", kind="stable")
         for ch in ("G", "R"):
             bg = pdf.loc[(pdf["ch"] == ch) & (pdf["kind"] == "bg"), "v"].to_numpy()
             fg = pdf.loc[(pdf["ch"] == ch) & (pdf["kind"] == "fg"), "v"].to_numpy()
@@ -477,21 +498,52 @@ def noob_fit_params(
     )
 
 
-def _norm_exp_convolution_expr(x, mu, sigma, alpha, offset: float):
-    """K3 — closed-form norm-exp convolution as a column expression
+def _norm_exp_convolution(
+    df: DataFrame, cells: dict[str, tuple[str, str, str]], offset: float
+) -> DataFrame:
+    """K3 — closed-form norm-exp convolution of each cell column
     (reference stats.py:95-142): ``shifted + sigma^2 * exp(logpdf - logsf)``
-    evaluated at 0 for N(shifted, sigma), clipped >= 1e-6, plus offset."""
-    variance = sigma * sigma
-    shifted = x - mu - variance / alpha
-    log_ratio = norm_logpdf_expr(F.lit(0.0), shifted, sigma) - norm_logsf_expr(
-        F.lit(0.0), shifted, sigma
-    )
-    adjusted = shifted + variance * F.exp(log_ratio)
-    corrected = F.greatest(adjusted, F.lit(1e-6)) + F.lit(offset)
-    # parameter missing (failed fit) -> leave the value unchanged
-    return F.when(
-        mu.isNull() | sigma.isNull() | alpha.isNull() | x.isNull(), x
-    ).otherwise(corrected.cast("float"))
+    evaluated at 0 for N(shifted, sigma), clipped >= 1e-6, plus offset.
+
+    ``cells`` maps a cell column to its (mu, sigma, alpha) columns. Each
+    shared subexpression (shifted, z, v = z/sqrt2, |v|, t, erfc(|v|)) is
+    a projection of its own: CollapseProject keeps a column that the next
+    projection reads more than once, so it is generated and evaluated once
+    per cell. Inlined, the erfc argument alone appears about 25 times per
+    cell."""
+
+    def step(name, fn):
+        return {f"_{name}_{c}": fn(c, *p) for c, p in cells.items()}
+
+    def col(name, c):
+        return F.col(f"_{name}_{c}")
+
+    steps = [
+        ("shift", lambda c, mu, sg, al: (
+            F.col(c) - F.col(mu) - F.col(sg) * F.col(sg) / F.col(al))),
+        ("z", lambda c, mu, sg, al: (F.lit(0.0) - col("shift", c)) / F.col(sg)),
+        ("v", lambda c, *_: col("z", c) / F.lit(SQRT2)),
+        ("abs", lambda c, *_: F.abs(col("v", c))),
+        ("t", lambda c, *_: erfc_t_expr(col("abs", c))),
+        ("tail", lambda c, *_: erfc_tail_expr(col("abs", c), col("t", c))),
+    ]
+    for name, fn in steps:
+        df = df.withColumns(step(name, fn))
+
+    def corrected(c, mu, sg, al):
+        x, sigma = F.col(c), F.col(sg)
+        log_ratio = norm_logpdf_z_expr(col("z", c), sigma) - F.log(
+            F.lit(0.5) * erfc_from_tail(col("v", c), col("tail", c))
+        )
+        adjusted = col("shift", c) + sigma * sigma * F.exp(log_ratio)
+        out = F.greatest(adjusted, F.lit(1e-6)) + F.lit(offset)
+        # parameter missing (failed fit) -> leave the value unchanged
+        return F.when(
+            F.col(mu).isNull() | sigma.isNull() | F.col(al).isNull() | x.isNull(), x
+        ).otherwise(out.cast("float"))
+
+    out = df.withColumns({c: corrected(c, *p) for c, p in cells.items()})
+    return out.drop(*[f"_{name}_{c}" for name, _fn in steps for c in cells])
 
 
 def noob_background_correction(
@@ -519,19 +571,9 @@ def noob_background_correction(
     out = signal.join(F.broadcast(pg), "sample", "left").join(
         F.broadcast(pr), "sample", "left"
     )
-    for c, mu, sg, al in (
-        ("mg", "mu_g", "sigma_g", "alpha_g"),
-        ("ug", "mu_g", "sigma_g", "alpha_g"),
-        ("mr", "mu_r", "sigma_r", "alpha_r"),
-        ("ur", "mu_r", "sigma_r", "alpha_r"),
-    ):
-        out = out.withColumn(
-            c,
-            _norm_exp_convolution_expr(
-                F.col(c), F.col(mu), F.col(sg), F.col(al), offset
-            ),
-        )
-    return out.drop("mu_g", "sigma_g", "alpha_g", "mu_r", "sigma_r", "alpha_r")
+    g, r = ("mu_g", "sigma_g", "alpha_g"), ("mu_r", "sigma_r", "alpha_r")
+    out = _norm_exp_convolution(out, {"mg": g, "ug": g, "mr": r, "ur": r}, offset)
+    return out.drop(*g, *r)
 
 
 # ---------------------------------------------------------------------------
@@ -589,84 +631,82 @@ def poobah(
     """Detection p-values from the ECDF of out-of-band background:
     ``p = min_channel(1 - ECDF_bg_channel(max(M, U)))``.
 
-    Distributed ECDF: union background values (flag 1) with foreground query
-    values (flag 0) and take a running count of background rows over a window
-    per (sample, channel) ordered by value — count(bg <= x) without any
-    driver-side vector. Ties order background first (ECDF is inclusive).
+    Background: OOB cells of type I probes (+ negative controls when
+    ``use_negative_controls``), non-unique and masked probes excluded.
+    Every probe, masked or not, gets a p-value from its own cells.
+
+    One scan: each signal row explodes into its foreground query values
+    (flag 0) and background values (flag 1), and one window per (sample,
+    channel) ordered by value gives the running count of background rows
+    — count(bg <= x), ties ordered background first (the ECDF is
+    inclusive) — plus the partition's background count and sum. A (sample,
+    channel) without background gets no p-value from that channel.
 
     Low-signal fallback: when sum(bg) <= 100 the reference substitutes a
-    uniform 0..999 prior (samples.py:1583-1589) — generated via sequence().
+    uniform 0..999 prior (samples.py:1583-1589), whose ECDF is closed-form:
+    ``count = 0 if x < 0 else min(floor(x) + 1, 1000)`` of ``n = 1000``.
 
     Returns (pvalues, poobah_mask): pvalues is (sample, probe_id, p_value);
     the mask holds rows with p_value >= threshold, named ``poobah_<t>``.
     """
-    work = signal
-    if masks is not None:
-        from pylluminator_spark.operators.masks import apply_mask_nullout
+    if masks is None:
+        work = signal.withColumn("_masked", F.lit(False))
+    else:
+        from pylluminator_spark.operators.masks import _mask_hits
 
-        work = apply_mask_nullout(signal, masks)
-    work = work.withColumn(
-        "_nonuniq",
-        F.coalesce(F.col("mask_info"), F.lit("")).rlike(NON_UNIQUE_MASK_PATTERN),
-    )
-
+        work = _mask_hits(signal, masks)
+    nonuniq = F.coalesce(F.col("mask_info"), F.lit("")).rlike(NON_UNIQUE_MASK_PATTERN)
     is_t1 = F.col("type") == "I"
-    is_neg = (F.col("probe_type") == "ctl") & F.col("probe_id").rlike("(?i)negative")
-    bg_src = work.filter(~F.col("_nonuniq") & (is_t1 | is_neg))
-    bg_g = bg_src.filter(is_neg | (F.col("channel") == "R")).select(
-        "sample", F.lit("G").alias("ch"), F.explode(F.array("mg", "ug")).alias("value")
-    )
-    bg_r = bg_src.filter(is_neg | (F.col("channel") == "G")).select(
-        "sample", F.lit("R").alias("ch"), F.explode(F.array("mr", "ur")).alias("value")
-    )
-    bg = bg_g.unionByName(bg_r).filter(F.col("value").isNotNull())
+    is_neg = F.lit(False)
+    if use_negative_controls:
+        is_neg = (F.col("probe_type") == "ctl") & F.col("probe_id").rlike("(?i)negative")
+    bg_ok = ~nonuniq & ~F.col("_masked")
+    bg_g = bg_ok & (is_neg | (is_t1 & (F.col("channel") == "R")))
+    bg_r = bg_ok & (is_neg | (is_t1 & (F.col("channel") == "G")))
 
-    # Low-signal fallback prior
-    bg_stats = bg.groupBy("sample", "ch").agg(F.sum("value").alias("_sum"))
-    low = bg_stats.filter(F.col("_sum") <= 100).select("sample", "ch")
-    prior = low.select(
-        "sample", "ch", F.explode(F.sequence(F.lit(0), F.lit(999))).alias("value")
-    ).select("sample", "ch", F.col("value").cast("double").alias("value"))
-    bg = (
-        bg.join(low.withColumn("_low", F.lit(True)), ["sample", "ch"], "left")
-        .filter(F.col("_low").isNull())
-        .drop("_low")
-        .select("sample", "ch", F.col("value").cast("double").alias("value"))
-        .unionByName(prior)
-    )
+    def value(ch, v, is_bg):
+        return F.struct(
+            F.lit(ch).alias("ch"),
+            v.cast("double").alias("value"),
+            F.lit(is_bg).alias("_is_bg"),
+        )
 
-    fg = signal.select(
+    values = F.array(
+        value("G", F.greatest("mg", "ug"), 0),
+        value("R", F.greatest("mr", "ur"), 0),
+        *[value("G", F.when(bg_g, F.col(c)), 1) for c in ("mg", "ug")],
+        *[value("R", F.when(bg_r, F.col(c)), 1) for c in ("mr", "ur")],
+    )
+    long = (
+        work.select("sample", "probe_id", F.explode(values).alias("q"))
+        .select("sample", "probe_id", "q.*")
+        .filter((F.col("_is_bg") == 0) | F.col("value").isNotNull())
+    )
+    w = Window.partitionBy("sample", "ch").orderBy(
+        F.col("value").asc_nulls_last(), F.col("_is_bg").desc()
+    )
+    whole = w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+    counted = long.select(
         "sample",
         "probe_id",
-        F.explode(
-            F.array(
-                F.struct(F.lit("G").alias("ch"), F.greatest("mg", "ug").cast("double").alias("value")),
-                F.struct(F.lit("R").alias("ch"), F.greatest("mr", "ur").cast("double").alias("value")),
-            )
-        ).alias("q"),
-    ).select("sample", "probe_id", "q.ch", "q.value")
-
-    union = bg.select(
-        "sample", "ch", "value", F.lit(1).alias("_is_bg"), F.lit(None).cast("string").alias("probe_id")
-    ).unionByName(
-        fg.select("sample", "ch", "value", F.lit(0).alias("_is_bg"), "probe_id")
+        "value",
+        "_is_bg",
+        F.sum("_is_bg").over(w.rowsBetween(Window.unboundedPreceding, 0)).alias("_cum_bg"),
+        F.sum("_is_bg").over(whole).alias("_n_bg"),
+        F.sum(F.when(F.col("_is_bg") == 1, F.col("value"))).over(whole).alias("_sum_bg"),
     )
-    w = (
-        Window.partitionBy("sample", "ch")
-        .orderBy(F.col("value").asc_nulls_last(), F.col("_is_bg").desc())
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    counted = union.withColumn("_cum_bg", F.sum("_is_bg").over(w))
-    n_bg = bg.groupBy("sample", "ch").agg(F.count(F.lit(1)).alias("_n_bg"))
-    pvals_per_channel = (
-        counted.filter(F.col("_is_bg") == 0)
-        .join(F.broadcast(n_bg), ["sample", "ch"])
-        .withColumn(
-            "p_channel",
-            F.when(F.col("value").isNull(), F.lit(None)).otherwise(
-                F.lit(1.0) - F.col("_cum_bg") / F.col("_n_bg")
-            ),
-        )
+    x = F.col("value")
+    low = F.col("_sum_bg") <= 100
+    # min(floor(x) + 1, 1000) without flooring huge values; NaN compares
+    # >= 999 in Spark, as it sorts after every prior value in the window
+    prior_cum = F.when(x < 0, F.lit(0)).when(x >= 999, F.lit(1000)).otherwise(F.floor(x) + 1)
+    cum = F.when(low, prior_cum).otherwise(F.col("_cum_bg"))
+    n = F.when(low, F.lit(1000)).otherwise(F.col("_n_bg"))
+    pvals_per_channel = counted.filter(
+        (F.col("_is_bg") == 0) & (F.col("_n_bg") > 0)
+    ).withColumn(
+        "p_channel",
+        F.when(x.isNull(), F.lit(None)).otherwise(F.lit(1.0) - cum / F.nullif(n, F.lit(0))),
     )
     pvalues = pvals_per_channel.groupBy("sample", "probe_id").agg(
         F.min("p_channel").alias("p_value")

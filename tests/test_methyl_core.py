@@ -486,3 +486,59 @@ def test_facade_probe_ids_and_calculate_betas(session):
         served[["sample", "probe_id", "beta"]],
         fresh[["sample", "probe_id", "beta"]],
     )
+
+
+def _rows(df) -> list[tuple]:
+    return sorted(map(tuple, df.collect()), key=repr)
+
+
+def test_run_pipeline_from_idata_session(spark, session, tmp_path):
+    """run_pipeline on a ``from_idata`` session: the min-beads masks root
+    is a stage over the stored signal, so cold, warm and param runs cache
+    as for any root, and the outputs equal the imperative chain's."""
+    from pylluminator_spark.plans.manifest import PipelineManifest
+
+    m = PipelineManifest(spark, str(tmp_path / "pl"))
+    cold, cold_refs = session.run_pipeline(m, source_fingerprint="idat-v1")
+    warm, warm_refs = session.run_pipeline(m, source_fingerprint="idat-v1")
+    _param, param_refs = session.run_pipeline(
+        m, source_fingerprint="idat-v1", include_out_of_band=True
+    )
+    assert not any(r.from_cache for r in cold_refs.values())
+    assert all(r.from_cache for r in warm_refs.values())
+    assert [n for n, r in param_refs.items() if not r.from_cache] == ["betas"]
+    masks_entry = m.entry(cold_refs["masks"].key)
+    assert masks_entry["inputs"] == [cold_refs["signal"].key]
+    assert masks_entry["params"] == {"min_beads": 2}
+
+    ref = session.preprocess(dye_bias="linear", poobah_threshold=0.05)
+    for piped in (cold, warm):
+        assert _rows(piped.masks) == _rows(ref.masks)
+        for apply_mask in (False, True):
+            got = piped.get_betas(apply_mask=apply_mask).select("sample", "probe_id", "beta")
+            want = ref.betas(apply_mask=apply_mask).select("sample", "probe_id", "beta")
+            assert _rows(got) == _rows(want)
+    # the min-beads masks are part of the result: fixture probes with
+    # low-bead addresses are masked in every sample
+    names = {r["mask_name"] for r in cold.masks.select("mask_name").distinct().collect()}
+    assert "min_beads_2" in names
+    ref.signal.unpersist()
+
+
+def test_run_pipeline_added_mask_keys_masks_by_content(spark, session, tmp_path):
+    """Masks that are not the signal's own min-beads masks keep the
+    content-fingerprint root."""
+    from pylluminator_spark.plans.manifest import PipelineManifest
+
+    m = PipelineManifest(spark, str(tmp_path / "pl"))
+    masked = session.mask_probes_by_names("M_nonuniq")
+    piped, refs = masked.run_pipeline(m, source_fingerprint="idat-v1")
+    assert refs["masks"].key.startswith("frm-")
+    assert m.entry(refs["masks"].key)["inputs"] == []
+    assert _rows(refs["masks"].df) == _rows(masked.masks)
+    names = {r["mask_name"] for r in piped.masks.select("mask_name").distinct().collect()}
+    assert {"min_beads_2", "M_nonuniq"} <= names
+    # the session's own min-beads masks root a different key
+    _, own = session.run_pipeline(m, source_fingerprint="idat-v1")
+    assert own["masks"].key != refs["masks"].key
+    assert not own["masks"].key.startswith("frm-")

@@ -4,6 +4,8 @@ SURVEY §5.2 at synthetic scale)."""
 
 from __future__ import annotations
 
+import re
+
 import numpy as np
 import pandas as pd
 import pytest
@@ -283,3 +285,133 @@ def test_poobah_matches_numpy_ecdf(signal, signal_pdf):
     # mask rows are exactly those >= threshold
     n_mask = mask.count()
     assert n_mask == (got["p_value"] >= 0.05).sum()
+
+
+# ---------------------------------------------------------------------------
+# pOOBAH branches against a numpy ECDF over the whole p-value table
+# ---------------------------------------------------------------------------
+
+def _numpy_poobah(pdf: pd.DataFrame, use_negative_controls=True, masked=()):
+    """{(sample, probe_id): p_value} by the reference semantics: background
+    = OOB cells of type I probes (+ negative controls), non-unique and
+    masked probes left out; a background summing to <= 100 is replaced by
+    the uniform 0..999 prior; a channel without background gives no
+    p-value, and a probe with no channel left gets no row."""
+    masked = set(masked)
+    out = {}
+    for sample, sp in pdf.groupby("sample"):
+        keep = sp[
+            ~sp.mask_info.map(lambda m: bool(re.search(pp.NON_UNIQUE_MASK_PATTERN, m or "")))
+            & ~sp.probe_id.map(lambda p: (sample, p) in masked)
+        ]
+        t1 = keep[keep.type == "I"]
+        is_neg = (keep.probe_type == "ctl") & keep.probe_id.str.contains("negative")
+        neg = keep[is_neg if use_negative_controls else np.zeros(len(keep), bool)]
+        bgs = {}
+        for ch, other, cells in (("G", "R", ["mg", "ug"]), ("R", "G", ["mr", "ur"])):
+            src = pd.concat([t1[t1.channel == other], neg])
+            bg = src[cells].to_numpy(dtype=float).ravel()
+            bg = np.sort(bg[~np.isnan(bg)])
+            if len(bg) and bg.sum() <= 100:
+                bg = np.arange(1000, dtype=float)
+            bgs[ch] = bg
+        for _, row in sp.iterrows():
+            ps = []
+            for ch, cells in (("G", ["mg", "ug"]), ("R", ["mr", "ur"])):
+                if not len(bgs[ch]):
+                    continue
+                vals = np.array([row[c] for c in cells], dtype=float)
+                if np.isnan(vals).all():
+                    ps.append(np.nan)
+                    continue
+                x = np.nanmax(vals)
+                ps.append(1.0 - np.searchsorted(bgs[ch], x, side="right") / len(bgs[ch]))
+            if ps:
+                out[(sample, row.probe_id)] = np.nanmin(ps) if not np.isnan(ps).all() else np.nan
+    return out
+
+
+def _assert_pvalues(pvals, expected):
+    got = {(r["sample"], r["probe_id"]): r["p_value"] for r in pvals.collect()}
+    assert set(got) == set(expected)
+    for key, want in expected.items():
+        if np.isnan(want):
+            assert got[key] is None, key
+        else:
+            assert got[key] == pytest.approx(want, abs=1e-12), key
+
+
+def _signal_rows(sample, probes):
+    """(probe_id, type, channel, probe_type, mg, mr, ug, ur) -> rows."""
+    return [
+        dict(sample=sample, probe_id=p, type=t, channel=c, probe_type=pt,
+             mask_info="", mg=mg, mr=mr, ug=ug, ur=ur)
+        for p, t, c, pt, mg, mr, ug, ur in probes
+    ]
+
+
+def test_poobah_without_negative_controls(signal, signal_pdf):
+    """``use_negative_controls=False`` leaves the negative controls out of
+    the background (reference samples.py:1529-1607)."""
+    pvals, _mask = pp.poobah(signal, use_negative_controls=False)
+    _assert_pvalues(pvals, _numpy_poobah(signal_pdf, use_negative_controls=False))
+    with_neg, _ = pp.poobah(signal)
+    assert {tuple(r) for r in with_neg.collect()} != {tuple(r) for r in pvals.collect()}
+
+
+def test_poobah_masked_probes_leave_background(spark, signal, signal_pdf):
+    """Masked probes drop out of the background but still get p-values from
+    their own cells; global and per-sample masks both count."""
+    masked_pids = [f"cg1R{i:04d}" for i in range(1, 25)] + ["ctl_negative_003"]
+    masks = spark.createDataFrame(
+        [("m", None, p) for p in masked_pids] + [("m", "sB", "cg1G0002")],
+        "mask_name string, sample string, probe_id string",
+    )
+    masked = {(s, p) for s in SAMPLES for p in masked_pids} | {("sB", "cg1G0002")}
+    pvals, _mask = pp.poobah(signal, masks)
+    _assert_pvalues(pvals, _numpy_poobah(signal_pdf, masked=masked))
+    unmasked, _ = pp.poobah(signal)
+    assert {tuple(r) for r in unmasked.collect()} != {tuple(r) for r in pvals.collect()}
+
+
+def test_poobah_low_signal_prior_and_missing_background(spark):
+    """Sample ``sL``: its green background sums to <= 100, so green p-values
+    come from the uniform 0..999 prior (boundary values included); its red
+    background is empirical. Sample ``sX`` has no red background, so its
+    probes get green p-values only. Sample ``sY`` has no background at all,
+    so its probes get no row."""
+    low = [(f"cg1R{i:04d}", "I", "R", "cg", 0.5 + i, 800.0 + i, 1.5 + i, 900.0 + i)
+           for i in range(8)]
+    high = [(f"cg1G{i:04d}", "I", "G", "cg", 1200.0 + i, 40.0 + 17 * i, 1100.0, 55.0 + 11 * i)
+            for i in range(10)]
+    fg_vals = [0.0, 0.5, 1.0, 2.0, 998.9, 999.0, 999.5, 5000.0, 120.0]
+    # green-only type II probes: their p-value is the green one
+    t2 = [(f"cg2{i:05d}", "II", None, "cg", v, None, None, None)
+          for i, v in enumerate(fg_vals)]
+    t2.append(("cg2nulls", "II", None, "cg", None, None, None, None))
+    rows = _signal_rows("sL", low + high + t2)
+    rows += _signal_rows("sX", low + t2)
+    rows += _signal_rows("sY", t2)
+    pdf = pd.DataFrame(rows)
+    signal = spark.createDataFrame(pdf)
+    expected = _numpy_poobah(pdf)
+    assert not any(s == "sY" for s, _p in expected)
+    # the prior is in play: the green background of sL sums to <= 100
+    assert expected[("sL", "cg200001")] == pytest.approx(1.0 - 1 / 1000)
+    pvals, _mask = pp.poobah(signal)
+    _assert_pvalues(pvals, expected)
+
+
+def test_noob_apply_codegen_stays_small(spark, signal):
+    """The NOOB apply plan projects each shared subexpression of the
+    norm-exp convolution once. With them inlined, this plan's generated
+    Java is about 1 MB."""
+    key = "spark.sql.adaptive.enabled"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try:
+        plan = pp.noob_background_correction(signal)._jdf.queryExecution().executedPlan()
+        code = spark._jvm.org.apache.spark.sql.execution.debug.package.codegenString(plan)
+    finally:
+        spark.conf.set(key, prev)
+    assert len(code) < 300_000, len(code)
