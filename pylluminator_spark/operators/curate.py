@@ -1189,8 +1189,8 @@ def curate_increment(
     survivors: content the corpus REJECTED never suppresses new content. Returns the
     curated NEW documents only — append them downstream. Generations
     are resolved by walking the ledger chain from each quality-gate
-    entry (never by per-stage ``latest``, which could mix stages from
-    different runs when a later run cache-hits upstream stages).
+    entry (never by the latest entry per stage name, which could mix stages
+    from different runs when a later run cache-hits upstream stages).
 
     ``pack_budget`` (optional; must equal the base run's — validated
     against the ledger) additionally packs the increment with sequence

@@ -17,8 +17,9 @@ Scale notes:
 - Convergence check is a 1-row aggregate (sum of label changes).
 - Each round re-partitions on the join key only; AQE handles skew from
   high-degree nodes (a viral duplicate) via skew-join splitting.
-- `checkpoint_every` truncates the lineage so long chains don't blow the
-  plan optimizer at high round counts.
+- Every round's labels are checkpointed: each round reads the previous
+  labels three times (neighbours, jump, own label), so an uncut lineage
+  grows about fourfold per round and exhausts JVM memory within a few.
 """
 
 from __future__ import annotations
@@ -33,7 +34,6 @@ def connected_components(
     src: str = "src",
     dst: str = "dst",
     max_iter: int = 20,
-    checkpoint_every: int = 5,
     num_partitions: int | None = None,
 ) -> DataFrame:
     """Label every node of the undirected graph ``edges`` with the MINIMUM
@@ -69,13 +69,10 @@ def connected_components(
         .groupBy("a")
         .agg(F.min("b").alias("lab"))
         .select(F.col("a").alias("node"), "lab")
-        .persist()  # consumed three times per round (nbr, jump, changed)
+        .persist()  # consumed three times by the first round
     )
-    # Caches that are safe to drop only after the NEXT action has run
-    # (unpersisting a not-yet-materialized frame would force the folded
-    # round to recompute it once per consumer).
-    pending = [labels]
-    for it in range(max_iter):
+    initial = labels
+    for _ in range(max_iter):
         # propagate: each node adopts min(own, neighbours', and its label's
         # label). The third term is pointer-jumping (short-cutting): label
         # chains halve every round, giving O(log diameter) convergence even
@@ -98,36 +95,22 @@ def connected_components(
         )
         if num_partitions:
             merged = merged.repartition(num_partitions, "node")
-        agg = merged.groupBy("node").agg(
-            F.min("lab").alias("lab"),
-            F.min(F.when(F.col("_self"), F.col("lab"))).alias("_prev"),
+        # the eager checkpoint materializes this round's labels for the
+        # next round's three reads and cuts the lineage every round, so
+        # the plan stays one round deep
+        agg = stable_checkpoint(
+            merged.groupBy("node").agg(
+                F.min("lab").alias("lab"),
+                F.min(F.when(F.col("_self"), F.col("lab"))).alias("_prev"),
+            )
         )
-        if checkpoint_every and (it + 1) % checkpoint_every == 0:
-            # lineage cut without requiring a checkpoint dir; keeps the
-            # iterative plan bounded for the optimizer
-            agg = stable_checkpoint(agg)
-        agg = agg.persist()
+        initial.unpersist()
         labels = agg.select("node", "lab")
-        pending.append(agg)
-        # One action per round: the count both materializes this round's
-        # labels (so the three consumers of the next round hit the cache —
-        # deferring it would let parallel stages recompute the uncached
-        # plan multiplicatively) and reads the convergence signal off the
-        # same aggregation.
+        # convergence signal off the same aggregation
         changed = agg.filter(F.col("lab") < F.col("_prev")).count()
-        for df in pending[:-1]:
-            df.unpersist()
-        pending = pending[-1:]
         if changed == 0:
-            out = labels.select("node", F.col("lab").alias("component"))
-            # materialize the (small) label table before dropping caches so
-            # the returned plan does not depend on the unpersisted inputs
-            out = stable_checkpoint(out)
-            agg.unpersist()
             sym.unpersist()
-            return out
-    for df in pending:
-        df.unpersist()
+            return labels.select("node", F.col("lab").alias("component"))
     sym.unpersist()
     raise RuntimeError(
         f"connected_components did not converge in {max_iter} rounds"

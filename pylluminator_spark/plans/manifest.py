@@ -487,40 +487,6 @@ class PipelineManifest:
         out.sort(key=lambda e: e.get("written_at", 0))
         return out
 
-    def latest(self, name: str) -> StageRef | None:
-        """Most recently written stage named ``name`` whose parquet still
-        exists, as a from_cache StageRef. Returns None when no such
-        stage has been materialized in this store.
-
-        CAUTION — this is a convenience for ad-hoc inspection of a
-        single stage, NOT a way to reconstruct a coherent pipeline run:
-        per-stage ``latest`` can mix stages from DIFFERENT runs (a later
-        run that cache-hits upstream stages writes only its downstream
-        ones, so its "latest dedup" and the "latest quality_gate" may
-        belong to different parameterizations). Incremental consumers
-        (``curate_increment``) therefore resolve generations by walking
-        the ledger chain from each terminal entry instead — see
-        ``entry`` / ``by_key`` / ``entries_named``."""
-        best = None
-        for e in self._entries.values():
-            if e.get("name") != name or not e.get("path"):
-                continue
-            if not os.path.exists(os.path.join(e["path"], "_SUCCESS")):
-                continue
-            if best is None or e.get("written_at", 0) > best.get(
-                "written_at", 0
-            ):
-                best = e
-        if best is None:
-            return None
-        return StageRef(
-            name=name,
-            key=best["key"],
-            df=self.spark.read.parquet(best["path"]),
-            path=best["path"],
-            from_cache=True,
-        )
-
     # -- introspection ---------------------------------------------------
 
     def lineage(self) -> DataFrame:

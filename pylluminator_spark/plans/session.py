@@ -17,6 +17,7 @@ from pyspark.sql import functions as F
 
 from pylluminator_spark.functions.methyl import beta_expr, meth_unmeth_exprs
 from pylluminator_spark.operators import masks as mask_ops
+from pylluminator_spark.operators.selectors import min_beads_nullify
 
 SIGNAL_KEY_COLS = ("probe_id", "type", "channel", "probe_type", "mask_info")
 
@@ -30,12 +31,10 @@ SIGNAL_KEY_COLS = ("probe_id", "type", "channel", "probe_type", "mask_info")
 # ----------------------------------------------------------------------
 
 
-def _stage_infer_channel(spark, sig, switch_failed=False, mask_failed=False):
+def _stage_infer_channel(spark, sig, switch_failed=False):
     from pylluminator_spark import preprocessing as pp
 
-    out, _summary, _failed = pp.infer_type1_channel(
-        sig, switch_failed, mask_failed
-    )
+    out, _summary, _failed = pp.infer_type1_channel(sig, switch_failed)
     return out
 
 
@@ -98,12 +97,7 @@ def assemble_signal(
     5. pivot to one row per (sample, probe) with mg/mr/ug/ur columns —
        a single hash aggregation, not a pandas pivot
     """
-    data = idata
-    if min_beads > 1:
-        low = F.col("n_beads") < min_beads
-        data = data.withColumn(
-            "mean_value", F.when(low, F.lit(None)).otherwise(F.col("mean_value"))
-        )
+    data = min_beads_nullify(idata, min_beads) if min_beads > 1 else idata
 
     addresses = (
         manifest.select(
@@ -259,16 +253,7 @@ class MethylSession:
             if apply_mask and self.masks is not None:
                 b = mask_ops.apply_mask_nullout(b, self.masks)
             return b
-        src = self.masked_signal() if apply_mask else self.signal
-        meth, unmeth = meth_unmeth_exprs(include_out_of_band)
-        return src.select(
-            "sample",
-            "probe_id",
-            "type",
-            "channel",
-            "probe_type",
-            beta_expr(meth, unmeth).alias("beta"),
-        )
+        return _stage_betas(self.spark, self._sig(apply_mask), include_out_of_band)
 
     def calculate_betas(
         self, include_out_of_band: bool = False
@@ -278,15 +263,7 @@ class MethylSession:
         once, persist them, and carry them on the new session — the
         immutable twin of the reference's in-place mutation. ``get_betas``
         then serves them with masking applied on top."""
-        meth, unmeth = meth_unmeth_exprs(include_out_of_band)
-        b = self.signal.select(
-            "sample",
-            "probe_id",
-            "type",
-            "channel",
-            "probe_type",
-            beta_expr(meth, unmeth).alias("beta"),
-        ).persist()
+        b = _stage_betas(self.spark, self.signal, include_out_of_band).persist()
         return replace(self, betas_df=b)
 
     def has_betas(self) -> bool:
@@ -496,12 +473,14 @@ class MethylSession:
     def infer_type1_channel(
         self, switch_failed: bool = False, mask_failed: bool = False
     ) -> "MethylSession":
+        """``mask_failed`` masks the probes whose channel could not be
+        inferred as 'failed_probes_inferTypeI' (reference
+        samples.py:940-1011)."""
         from pylluminator_spark import preprocessing as pp
 
-        sig, _summary, _failed = pp.infer_type1_channel(
-            self.signal, switch_failed, mask_failed
-        )
-        return self.with_signal(sig)
+        sig, _summary, failed = pp.infer_type1_channel(self.signal, switch_failed)
+        sess = self.with_signal(sig)
+        return sess.add_mask(failed, "failed_probes_inferTypeI") if mask_failed else sess
 
     def dye_bias_correction(self, reference: DataFrame | None = None) -> "MethylSession":
         from pylluminator_spark import preprocessing as pp
@@ -649,30 +628,14 @@ class MethylSession:
         tests/test_scale_pipeline.py). ``dye_bias``: 'linear' | 'nl' | None.
         pOOBAH failures (p >= threshold) land in the masks table.
         """
-        from pylluminator_spark import preprocessing as pp
-
-        sess = self
-        sig = sess.signal
-        if infer_channel:
-            sig, _summary, _failed = pp.infer_type1_channel(sig)
-        if dye_bias == "linear":
-            sig = pp.dye_bias_correction(sig)
-        elif dye_bias == "nl":
-            sig = pp.dye_bias_correction_nl(sig)
-        elif dye_bias is not None:
-            raise ValueError(f"dye_bias must be 'linear', 'nl' or None: {dye_bias!r}")
+        sess = self.infer_type1_channel() if infer_channel else self
+        if dye_bias is not None:
+            sess = sess.with_signal(_stage_dye_bias(self.spark, sess.signal, dye_bias))
         if noob:
-            sig = pp.noob_background_correction(sig, sess.masks)
-        sig = sig.persist()
-        sess = replace(sess, signal=sig)
+            sess = sess.noob_background_correction()
+        sess = sess.persist()
         if poobah_threshold is not None:
-            _pvals, pb_mask = pp.poobah(
-                sig, sess.masks, threshold=poobah_threshold
-            )
-            masks = sess.masks
-            if masks is None:
-                masks = mask_ops.empty_masks(self.spark)
-            sess = replace(sess, masks=masks.unionByName(pb_mask))
+            sess = sess.poobah(threshold=poobah_threshold)
         return sess
 
     def run_pipeline(

@@ -4,9 +4,12 @@ p-values — the reference's canonical pipeline (SURVEY §3.2).
 
 Spark-first decomposition of each kernel:
 
-- per-(sample, channel) *scalars* (means, medians, Huber fits) are computed
-  with aggregations / grouped-map pandas UDFs producing tiny parameter
-  tables, broadcast-joined back, and applied as column expressions;
+- per-(sample, channel) *scalars* (means, medians, Huber fits) form one
+  parameter row per sample, ``(sample, <G params>, <R params>)``, from one
+  scan and one aggregation (or one grouped-map pandas fit) over
+  channel-tagged cells; one broadcast left join brings the row back to
+  every cell, where the G params rewrite mg/ug and the R params mr/ur as
+  column expressions;
 - the norm-exp convolution (reference stats.py:95-142) is pure column math
   (normal pdf/sf via erfc) running in whole-stage codegen over every cell,
   one projection per shared subexpression so each is generated once;
@@ -107,7 +110,6 @@ def total_ib_intensity(signal: DataFrame) -> DataFrame:
 def infer_type1_channel(
     signal: DataFrame,
     switch_failed: bool = False,
-    mask_failed: bool = False,
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
     """Rewrite the ``channel`` of type I probes to the channel carrying the
     max signal across samples; tie -> 'R' (reference samples.py:940-1011,
@@ -116,8 +118,8 @@ def infer_type1_channel(
     Returns (new_signal, summary, failed_probes):
     - summary: (channel, inferred_channel, n) counts
     - failed_probes: probe_ids whose max < 95th pct of the inferred
-      background or with any NA cell (for the 'failed_probes_inferTypeI'
-      mask when ``mask_failed``).
+      background or with any NA cell (``MethylSession.infer_type1_channel``
+      masks them as 'failed_probes_inferTypeI' when ``mask_failed``).
 
     The reference mutates an index level then remaps every mask
     (samples.py:997-1008); in long form this is one groupBy + broadcast join
@@ -199,29 +201,80 @@ def infer_type1_channel(
         )
         .drop("inferred_channel")
     )
-    _ = mask_failed  # caller adds the mask from failed_probes
     return new_signal, summary, failed_probes
+
+
+# ---------------------------------------------------------------------------
+# One parameter row per sample, applied with one broadcast join
+# ---------------------------------------------------------------------------
+
+def _long_cells(signal: DataFrame, parts) -> DataFrame:
+    """(sample, <tags>, v), one row per non-NULL cell, from one explode:
+    each part is (rows, tags, cols) — the rows it takes, the literal tag
+    columns of its cells and the cell columns it reads."""
+    cells = F.array(
+        *[
+            F.struct(*[F.lit(x).alias(k) for k, x in tags.items()],
+                     F.when(rows, F.col(c)).alias("v"))
+            for rows, tags, cols in parts
+            for c in cols
+        ]
+    )
+    return (
+        signal.select("sample", F.explode(cells).alias("c"))
+        .select("sample", "c.*")
+        .filter(F.col("v").isNotNull())
+    )
+
+
+def _channel_stat(signal: DataFrame, agg, g, r) -> DataFrame:
+    """(sample, _g, _r): ``agg`` over each sample's non-NULL G cells and
+    over its R cells, from one explode and one aggregation. ``g`` and ``r``
+    are (rows, cells): the rows feeding the channel and their cell columns."""
+    parts = [(rows, {"ch": ch}, cols) for ch, (rows, cols) in (("G", g), ("R", r))]
+    long = _long_cells(signal, parts)
+    return long.groupBy("sample").agg(
+        *[agg(F.when(F.col("ch") == ch, F.col("v"))).alias(f"_{ch.lower()}")
+          for ch in ("G", "R")]
+    )
+
+
+def _apply_channels(signal: DataFrame, params: DataFrame, g_cols, r_cols, fn) -> DataFrame:
+    """Broadcast-left-join the one-row-per-sample ``params``, rewrite the
+    cells with ``fn(df, cells)`` (``cells`` maps mg/ug to ``g_cols`` and
+    mr/ur to ``r_cols``) and drop the parameter columns."""
+    out = signal.join(F.broadcast(params), "sample", "left")
+    out = fn(out, {"mg": g_cols, "ug": g_cols, "mr": r_cols, "ur": r_cols})
+    return out.drop(*g_cols, *r_cols)
 
 
 # ---------------------------------------------------------------------------
 # K6 — linear / control-based dye bias (reference samples.py:1257-1338)
 # ---------------------------------------------------------------------------
 
-def _scale_channels(signal: DataFrame, factors: DataFrame) -> DataFrame:
-    """Multiply each sample's G cells by f_g and R cells by f_r.
-
-    ``factors``: (sample, f_g, f_r) — broadcast-joined parameter table.
-    """
-    out = signal.join(F.broadcast(factors), "sample", "left")
-    fg = F.coalesce(F.col("f_g"), F.lit(1.0))
-    fr = F.coalesce(F.col("f_r"), F.lit(1.0))
-    return (
-        out.withColumn("mg", F.col("mg") * fg)
-        .withColumn("ug", F.col("ug") * fg)
-        .withColumn("mr", F.col("mr") * fr)
-        .withColumn("ur", F.col("ur") * fr)
-        .drop("f_g", "f_r")
+def _dye_bias_scale(
+    signal: DataFrame, reference: DataFrame | None, denominators: DataFrame
+) -> DataFrame:
+    """Scale G cells by mean_ib / _g and R cells by mean_ib / _r of the
+    ``_channel_stat`` table ``denominators``; a sample missing mean_ib or
+    either denominator keeps factor 1.0 on both channels."""
+    if reference is None:
+        reference = mean_ib_intensity(signal)
+    factors = (
+        reference.join(denominators, "sample")
+        .filter(F.col("_g").isNotNull() & F.col("_r").isNotNull())
+        .select(
+            "sample",
+            (F.col("mean_ib") / F.col("_g")).alias("f_g"),
+            (F.col("mean_ib") / F.col("_r")).alias("f_r"),
+        )
     )
+
+    def scale(df, cells):
+        factor = {c: F.coalesce(F.col(f), F.lit(1.0)) for c, (f,) in cells.items()}
+        return df.withColumns({c: F.col(c) * f for c, f in factor.items()})
+
+    return _apply_channels(signal, factors, ("f_g",), ("f_r",), scale)
 
 
 def dye_bias_correction(
@@ -233,25 +286,14 @@ def dye_bias_correction(
     Norm controls: green = probe_id ~ 'norm_c|norm_g', mean of mg; red =
     'norm_a|norm_t', mean of ur (reference samples.py:910-911).
     """
-    if reference is None:
-        reference = mean_ib_intensity(signal)
-    ctl = signal.filter(F.col("probe_type") == "ctl")
-    green = ctl.filter(F.col("probe_id").rlike("(?i)(norm_c|norm_g)")).groupBy(
-        "sample"
-    ).agg(F.avg("mg").alias("norm_g"))
-    red = ctl.filter(F.col("probe_id").rlike("(?i)(norm_a|norm_t)")).groupBy(
-        "sample"
-    ).agg(F.avg("ur").alias("norm_r"))
-    factors = (
-        reference.join(green, "sample")
-        .join(red, "sample")
-        .select(
-            "sample",
-            (F.col("mean_ib") / F.col("norm_g")).alias("f_g"),
-            (F.col("mean_ib") / F.col("norm_r")).alias("f_r"),
-        )
+    ctl = F.col("probe_type") == "ctl"
+    norm = _channel_stat(
+        signal,
+        F.avg,
+        g=(ctl & F.col("probe_id").rlike("(?i)(norm_c|norm_g)"), ("mg",)),
+        r=(ctl & F.col("probe_id").rlike("(?i)(norm_a|norm_t)"), ("ur",)),
     )
-    return _scale_channels(signal, factors)
+    return _dye_bias_scale(signal, reference, norm)
 
 
 def dye_bias_correction_l(
@@ -259,33 +301,14 @@ def dye_bias_correction_l(
 ) -> DataFrame:
     """Linear dye bias: scale each channel so its type-I in-band median hits
     the reference level (reference samples.py:1300-1338)."""
-    if reference is None:
-        reference = mean_ib_intensity(signal)
-    t1 = signal.filter(F.col("type") == "I")
-    med_g = (
-        t1.filter(F.col("channel") == "G")
-        .select("sample", F.explode(F.array("mg", "ug")).alias("v"))
-        .filter(F.col("v").isNotNull())
-        .groupBy("sample")
-        .agg(F.expr("percentile(v, 0.5)").alias("med_g"))
+    t1 = F.col("type") == "I"
+    medians = _channel_stat(
+        signal,
+        F.median,
+        g=(t1 & (F.col("channel") == "G"), ("mg", "ug")),
+        r=(t1 & (F.col("channel") == "R"), ("mr", "ur")),
     )
-    med_r = (
-        t1.filter(F.col("channel") == "R")
-        .select("sample", F.explode(F.array("mr", "ur")).alias("v"))
-        .filter(F.col("v").isNotNull())
-        .groupBy("sample")
-        .agg(F.expr("percentile(v, 0.5)").alias("med_r"))
-    )
-    factors = (
-        reference.join(med_g, "sample")
-        .join(med_r, "sample")
-        .select(
-            "sample",
-            (F.col("mean_ib") / F.col("med_g")).alias("f_g"),
-            (F.col("mean_ib") / F.col("med_r")).alias("f_r"),
-        )
-    )
-    return _scale_channels(signal, factors)
+    return _dye_bias_scale(signal, reference, medians)
 
 
 # ---------------------------------------------------------------------------
@@ -396,18 +419,39 @@ def _huber(values: np.ndarray, k: float = 1.5, tol: float = 1e-6):
     return mu, sigma
 
 
+def _noob_channel_fit(bg: np.ndarray, fg: np.ndarray):
+    """(mu, sigma, alpha) of one channel from its background and foreground
+    vectors (reference stats.py:64-92), or Nones when the fit fails."""
+    if len(bg[bg > 0]) < 100:
+        return None, None, None
+    bg = bg.copy()
+    fg = fg.copy()
+    bg[bg == 0] = 1
+    fg[fg == 0] = 1
+    q1, q3 = np.percentile(bg, [25, 75])
+    bg = bg[bg < np.median(bg) + 10 * (q3 - q1)]
+    mu, sigma = _huber(bg)
+    if mu is None:
+        return None, None, None
+    fg_mu, _sig = _huber(fg)
+    if fg_mu is None:
+        return None, None, None
+    return float(mu), float(sigma), float(max(fg_mu - mu, 10))
+
+
 def noob_fit_params(
     signal: DataFrame,
     masks: DataFrame | None = None,
     use_negative_controls: bool = True,
 ) -> DataFrame:
-    """Per-(sample, channel) NOOB parameters (mu, sigma, alpha)
-    (reference samples.py:1429-1502 + stats.py:64-92).
+    """NOOB parameters (reference samples.py:1429-1502 + stats.py:64-92),
+    one row per sample: (sample, mu_g, sigma_g, alpha_g, mu_r, sigma_r,
+    alpha_r), NULL for a channel whose fit fails.
 
     Background = OOB cells of type I probes (+ negative controls), non-unique
     probes masked; zeros -> 1; capped at median + 10*IQR. Foreground = in-band
-    + type II cells. The Huber fit needs the full vector -> grouped-map UDF
-    per sample emitting one tiny parameter row per channel.
+    + type II cells. The Huber fit needs the full vector -> one grouped-map
+    UDF per sample fitting both channels.
     """
     work = signal
     if masks is not None:
@@ -440,61 +484,31 @@ def noob_fit_params(
         (is_t2 & clean, "G", "fg", ("mg",)),
         (is_t2 & clean, "R", "fg", ("ur",)),
     ]
-    # one scan: every row explodes into all of its parts' cells (NULL where
-    # the part does not apply), tagged with the part's index so the fit can
-    # read each vector part by part
-    cells = F.array(
-        *[
-            F.struct(
-                F.lit(i).alias("part"),
-                F.lit(ch).alias("ch"),
-                F.lit(kind).alias("kind"),
-                F.when(rows, F.col(c)).alias("v"),
-            )
-            for i, (rows, ch, kind, cols) in enumerate(parts)
-            for c in cols
-        ]
-    )
-    long = (
-        work.select("sample", F.explode(cells).alias("c"))
-        .select("sample", "c.*")
-        .filter(F.col("v").isNotNull())
+    # one scan, each cell tagged with its part's index so the fit can read
+    # each vector part by part
+    long = _long_cells(
+        work,
+        [(rows, {"part": i, "ch": ch, "kind": kind}, cols)
+         for i, (rows, ch, kind, cols) in enumerate(parts)],
     )
 
     def _fit(pdf: pd.DataFrame) -> pd.DataFrame:
-        out = []
-        sample = pdf["sample"].iloc[0]
+        row = {"sample": pdf["sample"].iloc[0]}
         # part by part, scan order within a part: the Huber means sum each
         # vector in this order, and float sums depend on it
         pdf = pdf.sort_values("part", kind="stable")
         for ch in ("G", "R"):
             bg = pdf.loc[(pdf["ch"] == ch) & (pdf["kind"] == "bg"), "v"].to_numpy()
             fg = pdf.loc[(pdf["ch"] == ch) & (pdf["kind"] == "fg"), "v"].to_numpy()
-            if len(bg[bg > 0]) < 100:
-                out.append((sample, ch, None, None, None))
-                continue
-            bg = bg.copy()
-            fg = fg.copy()
-            bg[bg == 0] = 1
-            fg[fg == 0] = 1
-            q1, q3 = np.percentile(bg, [25, 75])
-            bg = bg[bg < np.median(bg) + 10 * (q3 - q1)]
-            mu, sigma = _huber(bg)
-            if mu is None:
-                out.append((sample, ch, None, None, None))
-                continue
-            fg_mu, _sig = _huber(fg)
-            if fg_mu is None:
-                out.append((sample, ch, None, None, None))
-                continue
-            alpha = max(fg_mu - mu, 10)
-            out.append((sample, ch, float(mu), float(sigma), float(alpha)))
-        return pd.DataFrame(
-            out, columns=["sample", "channel", "mu", "sigma", "alpha"]
-        )
+            fit = _noob_channel_fit(bg, fg)
+            for name, value in zip(("mu", "sigma", "alpha"), fit):
+                row[f"{name}_{ch.lower()}"] = value
+        return pd.DataFrame([row])
 
     return long.groupBy("sample").applyInPandas(
-        _fit, "sample string, channel string, mu double, sigma double, alpha double"
+        _fit,
+        "sample string, mu_g double, sigma_g double, alpha_g double, "
+        "mu_r double, sigma_r double, alpha_r double",
     )
 
 
@@ -554,26 +568,15 @@ def noob_background_correction(
 ) -> DataFrame:
     """NOOB: fit per-(sample, channel) background params, then apply the
     norm-exp convolution to every cell of that channel — entirely JVM-side
-    after the tiny parameter join (reference samples.py:1429-1502)."""
+    after the one parameter join (reference samples.py:1429-1502)."""
     params = noob_fit_params(signal, masks, use_negative_controls)
-    pg = params.filter(F.col("channel") == "G").select(
-        "sample",
-        F.col("mu").alias("mu_g"),
-        F.col("sigma").alias("sigma_g"),
-        F.col("alpha").alias("alpha_g"),
+    return _apply_channels(
+        signal,
+        params,
+        ("mu_g", "sigma_g", "alpha_g"),
+        ("mu_r", "sigma_r", "alpha_r"),
+        lambda df, cells: _norm_exp_convolution(df, cells, offset),
     )
-    pr = params.filter(F.col("channel") == "R").select(
-        "sample",
-        F.col("mu").alias("mu_r"),
-        F.col("sigma").alias("sigma_r"),
-        F.col("alpha").alias("alpha_r"),
-    )
-    out = signal.join(F.broadcast(pg), "sample", "left").join(
-        F.broadcast(pr), "sample", "left"
-    )
-    g, r = ("mu_g", "sigma_g", "alpha_g"), ("mu_r", "sigma_r", "alpha_r")
-    out = _norm_exp_convolution(out, {"mg": g, "ug": g, "mr": r, "ur": r}, offset)
-    return out.drop(*g, *r)
 
 
 # ---------------------------------------------------------------------------
@@ -590,32 +593,21 @@ def scrub_background_correction(
         from pylluminator_spark.operators.masks import apply_mask_nullout
 
         work = apply_mask_nullout(signal, masks)
-    t1 = work.filter(F.col("type") == "I")
-    oob_g = (
-        t1.filter(F.col("channel") == "R")
-        .select("sample", F.explode(F.array("mg", "ug")).alias("v"))
-        .filter(F.col("v").isNotNull())
-        .groupBy("sample")
-        .agg(F.expr("percentile(v, 0.5)").alias("med_g"))
+    t1 = F.col("type") == "I"
+    medians = _channel_stat(
+        work,
+        F.median,
+        g=(t1 & (F.col("channel") == "R"), ("mg", "ug")),
+        r=(t1 & (F.col("channel") == "G"), ("mr", "ur")),
     )
-    oob_r = (
-        t1.filter(F.col("channel") == "G")
-        .select("sample", F.explode(F.array("mr", "ur")).alias("v"))
-        .filter(F.col("v").isNotNull())
-        .groupBy("sample")
-        .agg(F.expr("percentile(v, 0.5)").alias("med_r"))
-    )
-    out = signal.join(F.broadcast(oob_g), "sample", "left").join(
-        F.broadcast(oob_r), "sample", "left"
-    )
-    for c, med in (("mg", "med_g"), ("ug", "med_g"), ("mr", "med_r"), ("ur", "med_r")):
-        out = out.withColumn(
-            c,
-            F.when(F.col(med).isNull(), F.col(c)).otherwise(
-                F.greatest(F.col(c) - F.col(med), F.lit(1.0)).cast("float")
-            ),
-        )
-    return out.drop("med_g", "med_r")
+
+    def subtract(df, cells):
+        clipped = {c: F.greatest(F.col(c) - F.col(m), F.lit(1.0)).cast("float")
+                   for c, (m,) in cells.items()}
+        return df.withColumns({c: F.when(F.col(m).isNull(), F.col(c)).otherwise(clipped[c])
+                               for c, (m,) in cells.items()})
+
+    return _apply_channels(signal, medians, ("_g",), ("_r",), subtract)
 
 
 # ---------------------------------------------------------------------------

@@ -122,17 +122,9 @@ def sample_channel_from_path(path: str) -> tuple[str, str]:
     return sample, channel
 
 
-def read_idat_files(
-    spark: SparkSession,
-    path_glob: str,
-    min_beads: int | None = None,
-) -> DataFrame:
-    """Distributed IDAT scan -> long idata DataFrame.
-
-    ``min_beads`` applies the load-time low-bead null-out (P13, reference
-    samples.py:486-499): rows with ``n_beads < min_beads`` get NULL
-    mean_value/std_dev (rows are kept — downstream masks need them).
-    """
+def read_idat_files(spark: SparkSession, path_glob: str) -> DataFrame:
+    """Distributed IDAT scan -> long idata DataFrame. The low-bead null-out
+    (reference samples.py:486-499) happens in ``assemble_signal``."""
     binaries = spark.read.format("binaryFile").load(path_glob)
 
     def _parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -151,12 +143,7 @@ def read_idat_files(
                     }
                 )
 
-    df = binaries.select("path", "content").mapInPandas(_parse, IDATA_SCHEMA)
-    if min_beads is not None and min_beads > 1:
-        from pylluminator_spark.operators.selectors import min_beads_nullify
-
-        df = min_beads_nullify(df, min_beads)
-    return df
+    return binaries.select("path", "content").mapInPandas(_parse, IDATA_SCHEMA)
 
 
 def write_idat(

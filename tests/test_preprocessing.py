@@ -134,6 +134,23 @@ def test_infer_type1_channel_flipped_probe(spark, signal_pdf):
     assert [r["channel"] for r in got] == ["R"]
 
 
+def test_session_infer_channel_masks_failed_probes(spark, signal_pdf):
+    """``mask_failed`` masks the probes the channel inference fails on as
+    'failed_probes_inferTypeI' (reference samples.py:940-1011)."""
+    from pylluminator_spark.plans.session import MethylSession
+
+    pdf = signal_pdf.copy()
+    # max signal below the background's 95th percentile -> failed
+    pdf.loc[pdf.probe_id == "cg1G0003", ["mg", "mr", "ug", "ur"]] = 1.0
+    sess = MethylSession(spark=spark, signal=spark.createDataFrame(pdf))
+    masks = sess.infer_type1_channel(mask_failed=True).masks
+    assert masks is not None
+    assert {tuple(r) for r in masks.collect()} == {
+        ("failed_probes_inferTypeI", None, "cg1G0003")
+    }
+    assert sess.infer_type1_channel().masks is None
+
+
 def test_dye_bias_linear(signal, signal_pdf):
     corrected = pp.dye_bias_correction_l(signal).toPandas()
     for sample in SAMPLES:
@@ -158,6 +175,24 @@ def test_dye_bias_control_based(signal, signal_pdf):
     orig = pdf.set_index("probe_id")
     pid = "cg1G0007"
     assert got.loc[pid, "mg"] == pytest.approx(orig.loc[pid, "mg"] * f_g, rel=1e-5)
+
+
+def test_dye_bias_missing_red_controls_keeps_both_channels(spark, signal_pdf):
+    """A sample without red norm controls has no red factor, so neither
+    channel is scaled; the other sample still is."""
+    no_red = signal_pdf[signal_pdf["sample"] == "sA"].copy()
+    no_red = no_red[~no_red.probe_id.str.contains("norm_t")]
+    no_red["sample"] = "sN"
+    pdf = pd.concat([signal_pdf[signal_pdf["sample"] == "sA"], no_red])
+    cells = ["mg", "ug", "mr", "ur"]
+    got = (
+        pp.dye_bias_correction(spark.createDataFrame(pdf))
+        .toPandas()
+        .set_index(["sample", "probe_id"])[cells]
+    )
+    orig = pdf.set_index(["sample", "probe_id"])[cells].astype("float64")
+    pd.testing.assert_frame_equal(got.loc["sN"].sort_index(), orig.loc["sN"].sort_index())
+    assert not np.allclose(got.loc["sA"].sort_index(), orig.loc["sA"].sort_index())
 
 
 def test_dye_bias_nl_midpoint_property(signal, signal_pdf):
@@ -195,7 +230,7 @@ def _numpy_huber(values, k=1.5, tol=1e-6):
 
 
 def test_noob_fit_params(signal, signal_pdf):
-    params = pp.noob_fit_params(signal).toPandas().set_index(["sample", "channel"])
+    params = pp.noob_fit_params(signal).toPandas().set_index("sample")
     pdf = signal_pdf[signal_pdf["sample"] == "sA"]
     # reproduce the G-channel background: OOB of R probes + neg controls
     t1r = pdf[(pdf.type == "I") & (pdf.channel == "R") & (pdf.mask_info == "")]
@@ -206,16 +241,16 @@ def test_noob_fit_params(signal, signal_pdf):
     q1, q3 = np.percentile(bg, [25, 75])
     bg = bg[bg < np.median(bg) + 10 * (q3 - q1)]
     mu, sigma = _numpy_huber(bg)
-    got = params.loc[("sA", "G")]
-    assert got["mu"] == pytest.approx(mu, rel=1e-6)
-    assert got["sigma"] == pytest.approx(sigma, rel=1e-6)
-    assert got["alpha"] >= 10
+    got = params.loc["sA"]
+    assert got["mu_g"] == pytest.approx(mu, rel=1e-6)
+    assert got["sigma_g"] == pytest.approx(sigma, rel=1e-6)
+    assert got["alpha_g"] >= 10
 
 
 def test_noob_correction_matches_numpy(signal, signal_pdf):
-    params = pp.noob_fit_params(signal).toPandas().set_index(["sample", "channel"])
+    params = pp.noob_fit_params(signal).toPandas().set_index("sample")
     corrected = pp.noob_background_correction(signal, offset=15).toPandas()
-    mu, sigma, alpha = params.loc[("sA", "G")][["mu", "sigma", "alpha"]]
+    mu, sigma, alpha = params.loc["sA"][["mu_g", "sigma_g", "alpha_g"]]
 
     def numpy_convolution(x):
         var = sigma * sigma
@@ -402,16 +437,28 @@ def test_poobah_low_signal_prior_and_missing_background(spark):
     _assert_pvalues(pvals, expected)
 
 
-def test_noob_apply_codegen_stays_small(spark, signal):
-    """The NOOB apply plan projects each shared subexpression of the
-    norm-exp convolution once. With them inlined, this plan's generated
-    Java is about 1 MB."""
+def _executed_plan(spark, df):
+    """``df``'s executed plan with AQE off, so the plan is final."""
     key = "spark.sql.adaptive.enabled"
     prev = spark.conf.get(key)
     spark.conf.set(key, "false")
     try:
-        plan = pp.noob_background_correction(signal)._jdf.queryExecution().executedPlan()
-        code = spark._jvm.org.apache.spark.sql.execution.debug.package.codegenString(plan)
+        return df._jdf.queryExecution().executedPlan()
     finally:
         spark.conf.set(key, prev)
+
+
+def test_noob_apply_codegen_stays_small(spark, signal):
+    """The NOOB apply plan projects each shared subexpression of the
+    norm-exp convolution once. With them inlined, this plan's generated
+    Java is about 1 MB."""
+    plan = _executed_plan(spark, pp.noob_background_correction(signal))
+    code = spark._jvm.org.apache.spark.sql.execution.debug.package.codegenString(plan)
     assert len(code) < 300_000, len(code)
+
+
+def test_noob_fits_once(spark, signal):
+    """NOOB joins one parameter row per sample, so its plan runs the pandas
+    fit once for both channels."""
+    plan = _executed_plan(spark, pp.noob_background_correction(signal)).toString()
+    assert plan.count("FlatMapGroupsInPandas") == 1, plan
