@@ -1295,8 +1295,7 @@ def _oracle_minhash() -> str:
 def q_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SimHash near-dup fingerprints (relational 16-bit formulation):
     per-token hash h = (tid * 2654435761) mod 2^31; bit votes summed; the
-    fingerprint sets bits with positive votes. Engine-grade variant:
-    operators.dedup.simhash_expr (64-bit, xxhash64)."""
+    fingerprint sets bits with positive votes."""
     dt = _doc_tokens_df(spark, sf_dir)
     h = (F.col("tid") * F.lit(2654435761)) % F.lit(2147483647)
     votes = [

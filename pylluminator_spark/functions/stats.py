@@ -85,11 +85,6 @@ def erfc_from_tail(x: Column, tail: Column) -> Column:
     return F.when(x >= 0, tail).otherwise(F.lit(2.0) - tail)
 
 
-def norm_pdf_expr(x: Column, mu: Column | float = 0.0, sigma: Column | float = 1.0) -> Column:
-    z = (x - mu) / sigma
-    return F.exp(F.lit(-0.5) * z * z - F.lit(_LOG_SQRT_2PI)) / sigma
-
-
 def norm_logpdf_expr(x: Column, mu: Column | float = 0.0, sigma: Column | float = 1.0) -> Column:
     return norm_logpdf_z_expr((x - mu) / sigma, sigma)
 
@@ -103,11 +98,6 @@ def norm_sf_expr(x: Column, mu: Column | float = 0.0, sigma: Column | float = 1.
     """Survival function P(X > x) = 0.5*erfc(z/sqrt(2))."""
     z = (x - mu) / sigma
     return F.lit(0.5) * erfc_expr(z / F.lit(SQRT2))
-
-
-def norm_cdf_expr(x: Column, mu: Column | float = 0.0, sigma: Column | float = 1.0) -> Column:
-    z = (x - mu) / sigma
-    return F.lit(0.5) * erfc_expr(-z / F.lit(SQRT2))
 
 
 def norm_logsf_expr(x: Column, mu: Column | float = 0.0, sigma: Column | float = 1.0) -> Column:

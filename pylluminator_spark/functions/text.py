@@ -1,9 +1,9 @@
 """Text-analysis expression helpers for large-scale training-data pipelines.
 
-These are beyond-reference operators (driver north star): language-ID
-heuristics, quality scoring, token counting, shingling, and document
-fingerprinting — all as JVM-side column expressions so they stream through
-whole-stage codegen at 100 TB scale (no Python in the hot path).
+These are beyond-reference operators (driver north star): quality
+scoring, token counting, shingling, and document fingerprinting — all as
+JVM-side column expressions so they stream through whole-stage codegen at
+100 TB scale (no Python in the hot path).
 """
 
 from __future__ import annotations
@@ -11,17 +11,12 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-# Tiny per-language stopword lists for the n-gram/stopword language-ID
-# heuristic. Deliberately small: the operator shape (score -> argmax) is what
-# matters; swap in real lists for production.
-LANG_STOPWORDS: dict[str, list[str]] = {
-    "en": ["the", "and", "of", "to", "in", "is", "that", "for", "with", "on"],
-    "es": ["el", "la", "de", "que", "y", "en", "un", "por", "con", "los"],
-    "fr": ["le", "la", "de", "et", "les", "des", "en", "un", "du", "que"],
-    "de": ["der", "die", "und", "das", "von", "zu", "mit", "den", "im", "ein"],
-}
-
-STOPWORDS_EN = LANG_STOPWORDS["en"] + ["a", "an", "it", "as", "at", "by", "be"]
+# Tiny English stopword list behind the stopword-ratio fluency proxy.
+# Deliberately small; swap in a real list for production.
+STOPWORDS_EN = [
+    "the", "and", "of", "to", "in", "is", "that", "for", "with", "on",
+    "a", "an", "it", "as", "at", "by", "be",
+]
 
 
 def let_expr(value: Column, body) -> Column:
@@ -156,38 +151,6 @@ def quality_score_expr(text: Column) -> Column:
     punct_pen = F.lit(1.0) - F.least(punct_ratio_expr(text) * 4, F.lit(1.0))
     sw_score = F.least(stopword_ratio_expr(toks) * 5, F.lit(1.0))
     return (len_score + punct_pen + sw_score) / F.lit(3.0)
-
-
-def lang_scores_expr(tokens: Column) -> Column:
-    """Map of language -> stopword-hit count (the language-ID heuristic)."""
-    pairs = []
-    for lang, words in LANG_STOPWORDS.items():
-        sw = F.array(*[F.lit(w) for w in words])
-        hits = F.size(F.filter(tokens, lambda t: F.array_contains(sw, F.lower(t))))
-        pairs.append(F.struct(F.lit(lang).alias("lang"), hits.alias("hits")))
-    return F.array(*pairs)
-
-
-def lang_id_expr(text: Column) -> Column:
-    """Predicted language = argmax of stopword hits; 'und' when no hits.
-
-    Tie-break: lexicographic language code (deterministic).
-    """
-    toks = tokens_expr(text)
-    scores = lang_scores_expr(toks)
-    best = F.array_max(
-        F.transform(
-            scores,
-            # encode (hits, reversed-lang) so array_max picks max hits, then
-            # lexicographically-smallest lang on ties
-            lambda s: F.struct(
-                s["hits"].alias("hits"),
-                F.lit(0).alias("z"),
-                s["lang"].alias("lang"),
-            ),
-        )
-    )
-    return F.when(best["hits"] <= 0, F.lit("und")).otherwise(best["lang"])
 
 
 # PII scrubbing patterns. Deliberately RE2-compatible (no lookaround, no

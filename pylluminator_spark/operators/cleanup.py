@@ -165,67 +165,6 @@ def dedup_paragraphs(
     return _reassemble_total(flagged, id_col, keep_fps_col, carry_cols)
 
 
-def _reassemble_flagged(
-    df: DataFrame,
-    flagged: DataFrame,
-    id_col: str,
-    keep_fps_col: str | None = None,
-    carry_cols: tuple = (),
-) -> DataFrame:
-    """Rebuild documents from a (id, para_idx, para, fp, kept) table —
-    the shared tail of the corpus-wide and incremental paragraph dedups.
-    One doc-keyed aggregate; per-group state bounded by a document's
-    own paragraph count. ``carry_cols`` names columns of ``df`` to pass
-    through unchanged — they ride the join-back this function performs
-    anyway, so passthrough costs no extra shuffle."""
-    rebuilt = flagged.groupBy(id_col).agg(
-        F.array_sort(
-            F.collect_list(
-                F.when(
-                    F.col("kept"),
-                    F.struct(
-                        F.col("para_idx").alias("i"),
-                        F.col("para").alias("p"),
-                        F.col("fp").alias("f"),
-                    ),
-                )
-            )
-        ).alias("kept_paras"),
-        F.sum(F.when(F.col("kept"), 0).otherwise(1)).alias("n_paras_dropped"),
-    )
-    cols = [
-        id_col,
-        F.concat_ws(
-            "\n\n", F.transform("kept_paras", lambda s: s["p"])
-        ).alias("clean_text"),
-        F.size("kept_paras").cast("long").alias("n_paras_kept"),
-        F.col("n_paras_dropped").cast("long").alias("n_paras_dropped"),
-    ]
-    if keep_fps_col is not None:
-        cols.append(
-            F.array_sort(
-                F.array_distinct(
-                    F.transform("kept_paras", lambda s: s["f"])
-                )
-            ).alias(keep_fps_col)
-        )
-    out = rebuilt.select(*cols)
-    # left join back so fully-empty documents (no paragraphs at all) survive
-    res = (
-        df.select(id_col, *carry_cols)
-        .join(out, id_col, "left")
-        .fillna({"clean_text": "", "n_paras_kept": 0, "n_paras_dropped": 0})
-    )
-    if keep_fps_col is not None:
-        res = res.withColumn(
-            keep_fps_col,
-            F.coalesce(
-                F.col(keep_fps_col), F.array().cast("array<long>")
-            ),
-        )
-    return res
-
-
 def _reassemble_total(
     flagged: DataFrame,
     id_col: str,

@@ -7,7 +7,6 @@ the per-row path — so each scales as an ordinary shuffle pipeline:
 - exact dedup: hash-groupBy on a normalized fingerprint
 - MinHash + LSH: shingle → K minhashes → B bands → bucket join on
   (band, band_hash) → candidate pairs → exact Jaccard verify
-- SimHash: 64-bit sign-of-sum fingerprint, near-dup = small Hamming distance
 - n-gram Jaccard: exact pairwise similarity for candidate verification
 - embedding cosine near-dup: delegates to operators.similarity
 
@@ -633,98 +632,6 @@ def dedup_minhash_lsh_against(
     )
     losers = lose_b.unionByName(lose_a).distinct()
     return new_docs.join(losers, id_col, "left_anti")
-
-
-def simhash_expr(text_col: str = "text", bits: int = 64):
-    """SimHash fingerprint as a single column expression.
-
-    Per token: a 64-bit xxhash64; for each bit position, vote +1/-1; the
-    fingerprint sets bits with positive vote sums. All higher-order array
-    math — runs in codegen.
-    """
-    toks = F.array_distinct(tokens_expr(F.lower(F.col(text_col))))
-
-    # let-bind the per-token hash array: the votes lambda below references
-    # it once per bit position, and HOF lambdas re-evaluate referenced
-    # subtrees per element — unbound, this would tokenize + hash the whole
-    # document `bits` times per row (text.let_expr rationale)
-    def _fp_from_hashes(hashes) -> "F.Column":
-        bit_idx = F.sequence(F.lit(0), F.lit(bits - 1))
-        # vote for bit k = sum over tokens of (bit set ? 1 : -1)
-        votes = F.transform(
-            bit_idx,
-            lambda k: F.aggregate(
-                hashes,
-                F.lit(0),
-                lambda acc, h: acc
-                + F.when(
-                    F.shiftright(h, k).bitwiseAND(F.lit(1)) == 1, 1
-                ).otherwise(-1),
-            ),
-        )
-        fp = F.aggregate(
-            F.zip_with(
-                bit_idx, votes, lambda k, v: F.struct(k.alias("k"), v.alias("v"))
-            ),
-            F.lit(0).cast("long"),
-            lambda acc, kv: acc
-            + F.when(
-                kv["v"] > 0, F.shiftleft(F.lit(1).cast("long"), kv["k"])
-            ).otherwise(F.lit(0).cast("long")),
-        )
-        return F.when(F.size(hashes) > 0, fp).otherwise(F.lit(None))
-
-    return let_expr(
-        F.transform(toks, lambda t: F.xxhash64(t)), _fp_from_hashes
-    )
-
-
-def hamming_distance_expr(a, b):
-    """Population count of XOR — Hamming distance between two 64-bit prints."""
-    x = a.bitwiseXOR(b)
-    return F.bit_count(x)
-
-
-def dedup_simhash(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    max_hamming: int = 3,
-    band_bits: int = 16,
-) -> DataFrame:
-    """SimHash near-dedup: bucket by 16-bit bands (a fingerprint pair within
-    Hamming distance 3 of 64 bits shares at least one of 4 bands), verify
-    Hamming distance, drop the larger id of each pair."""
-    fp = docs.select(
-        F.col(id_col), simhash_expr(text_col).alias("_fp")
-    ).filter(F.col("_fp").isNotNull())
-    n_bands = 64 // band_bits
-    banded = fp.select(
-        id_col,
-        "_fp",
-        F.explode(F.sequence(F.lit(0), F.lit(n_bands - 1))).alias("_band"),
-    ).withColumn(
-        "_band_key",
-        F.shiftrightunsigned(F.col("_fp"), F.col("_band") * band_bits).bitwiseAND(
-            F.lit((1 << band_bits) - 1)
-        ),
-    )
-    a = banded.select(
-        "_band", "_band_key", F.col(id_col).alias("id_a"), F.col("_fp").alias("_fa")
-    )
-    b = banded.select(
-        "_band", "_band_key", F.col(id_col).alias("id_b"), F.col("_fp").alias("_fb")
-    )
-    pairs = (
-        a.join(b, ["_band", "_band_key"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b", "_fa", "_fb")
-        .distinct()
-        .withColumn("_ham", hamming_distance_expr(F.col("_fa"), F.col("_fb")))
-        .filter(F.col("_ham") <= max_hamming)
-    )
-    losers = pairs.select(F.col("id_b").alias(id_col)).distinct()
-    return docs.join(losers, id_col, "left_anti")
 
 
 def jaccard_join_exact(

@@ -112,10 +112,6 @@ def _fdct(block: np.ndarray) -> np.ndarray:
     return _T @ block @ _T.T
 
 
-def _idct(coef: np.ndarray) -> np.ndarray:
-    return _T.T @ coef @ _T
-
-
 def _scale_q(table: np.ndarray, quality: int) -> np.ndarray:
     """IJG quality scaling: 1..100 -> scaled Annex K table, clipped 1..255."""
     quality = min(100, max(1, quality))

@@ -4,18 +4,14 @@
 Schema: ``masks(mask_name string, sample string NULLABLE, probe_id string)``
 — a NULL sample means the mask applies to every sample (mask.py:19-32).
 
-Application semantics (reference samples.py:577-602):
-- *null-out*: signal values of masked probes become NULL but rows remain —
-  implemented as two equi left-joins (global + per-sample) and a ``when``.
-- *drop*: rows removed — implemented as anti-joins.
-
-Both paths are broadcast-friendly (mask tables are dimension-sized) and
-degrade gracefully to shuffle joins at scale via AQE.
+Application semantics (reference samples.py:577-602): *null-out* —
+signal values of masked probes become NULL but rows remain — implemented
+as two equi left-joins (global + per-sample) and a ``when``. Both joins are
+broadcast-friendly (mask tables are dimension-sized) and degrade gracefully
+to shuffle joins at scale via AQE.
 """
 
 from __future__ import annotations
-
-from collections.abc import Sequence
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -43,33 +39,6 @@ def add_mask(
         F.col("probe_id"),
     )
     return masks.unionByName(new)
-
-
-def remove_masks(
-    masks: DataFrame,
-    mask_names: str | Sequence[str] | None = None,
-    sample: str | None = None,
-) -> DataFrame:
-    """Drop masks by name and/or sample (reference mask.py:120-160)."""
-    out = masks
-    if mask_names is not None:
-        if isinstance(mask_names, str):
-            mask_names = [mask_names]
-        out = out.filter(~F.col("mask_name").isin(list(mask_names)))
-    if sample is not None:
-        out = out.filter(
-            F.col("sample").isNull() | (F.col("sample") != F.lit(sample))
-        )
-    return out
-
-
-def masked_probes(masks: DataFrame, sample: str | None = None) -> DataFrame:
-    """Distinct probe_ids masked for a given sample: union of global
-    (sample IS NULL) and per-sample masks (reference mask.py:162-199)."""
-    cond = F.col("sample").isNull()
-    if sample is not None:
-        cond = cond | (F.col("sample") == F.lit(sample))
-    return masks.filter(cond).select("probe_id").distinct()
 
 
 def _mask_hits(signal: DataFrame, masks: DataFrame) -> DataFrame:
@@ -119,13 +88,6 @@ def apply_mask_nullout(signal: DataFrame, masks: DataFrame) -> DataFrame:
             F.when(F.col("_masked"), F.lit(None)).otherwise(F.col("beta")),
         )
     return out.drop("_masked")
-
-
-def apply_mask_drop(signal: DataFrame, masks: DataFrame) -> DataFrame:
-    """Row-dropping mask application (anti-join flavor, reference
-    samples.py:1153-1160 betas variant)."""
-    hit = _mask_hits(signal, masks)
-    return hit.filter(~F.col("_masked")).drop("_masked")
 
 
 # ---------------------------------------------------------------------------

@@ -198,6 +198,12 @@ class PipelineManifest:
     >>> stats = m.stage("stats", stats_fn, [clean], {})
     second run: every .stage() call returns from_cache=True instantly.
 
+    A stage's parquet lives at ``<root>/<key>``. Every lookup (``stage``,
+    ``frame_source``, ``by_key``, ``entries_named``, ``gc``) derives that
+    path from ``root`` and goes through one publish-or-reuse path; the
+    ledger's ``path`` field is informational. A store moved or copied
+    to a new root therefore keeps its hits and its chain walks.
+
     CONCURRENCY: two runs sharing one root (e.g. two increments
     curating against the same corpus) are safe at the storage layer —
     stage parquet publishes via write-to-temp + atomic rename (the
@@ -301,42 +307,8 @@ class PipelineManifest:
                 fingerprint = h.hexdigest()[:16]
             else:
                 fingerprint = content_fingerprint(df)
-        key = f"frm-{fingerprint}"
-        out_dir = os.path.join(self.root, key)
-        marker = os.path.join(out_dir, "_SUCCESS")
-        if key in self._entries and os.path.exists(marker):
-            return StageRef(
-                name=name,
-                key=key,
-                df=self.spark.read.parquet(out_dir),
-                path=out_dir,
-                from_cache=True,
-            )
-        won = self._publish(df, out_dir)
-        entry = {
-            "key": key,
-            "name": name,
-            "inputs": [],
-            "input_names": [],
-            "params": {},
-            "path": out_dir,
-            "written_at": time.time(),
-        }
-        if meta_fn is not None:
-            # evaluated post-publish: observed write-time metrics exist
-            merged = dict(meta or {})
-            merged.update(meta_fn() or {})
-            meta = merged
-        if meta:
-            entry["meta"] = meta
-        if won or key not in self._entries:
-            self._append(entry)
-        return StageRef(
-            name=name,
-            key=key,
-            df=self.spark.read.parquet(out_dir),
-            path=out_dir,
-            from_cache=not won,
+        return self._materialize(
+            f"frm-{fingerprint}", name, [], {}, lambda: df, meta, meta_fn
         )
 
     # -- stages ----------------------------------------------------------
@@ -379,20 +351,55 @@ class PipelineManifest:
         route anything that varies through ``params``."""
         params = params or {}
         cv = code_version if code_version is not None else _fn_fingerprint(fn)
-        key = self.stage_key(name, inputs, params, cv)
+        return self._materialize(
+            self.stage_key(name, inputs, params, cv),
+            name,
+            inputs,
+            params,
+            lambda: fn(self.spark, *[i.df for i in inputs], **params),
+        )
+
+    # -- publish-or-reuse --------------------------------------------------
+
+    def _published(self, key: str) -> bool:
+        """True when ``key`` is in the ledger and its parquet is complete
+        under this root. Paths derive from ``self.root``, never from the
+        ledger, so a moved or copied store keeps working."""
+        return key in self._entries and os.path.exists(
+            os.path.join(self.root, key, "_SUCCESS")
+        )
+
+    def _ref(self, name: str, key: str, from_cache: bool) -> StageRef:
+        """StageRef over the stage parquet of ``key`` under this root."""
         out_dir = os.path.join(self.root, key)
-        marker = os.path.join(out_dir, "_SUCCESS")
-        if key in self._entries and os.path.exists(marker):
-            return StageRef(
-                name=name,
-                key=key,
-                df=self.spark.read.parquet(out_dir),
-                path=out_dir,
-                from_cache=True,
-            )
-        df = fn(self.spark, *[i.df for i in inputs], **params)
-        won = self._publish(df, out_dir)
-        out = self.spark.read.parquet(out_dir)
+        return StageRef(
+            name=name,
+            key=key,
+            df=self.spark.read.parquet(out_dir),
+            path=out_dir,
+            from_cache=from_cache,
+        )
+
+    def _materialize(
+        self,
+        key: str,
+        name: str,
+        inputs: list[StageRef],
+        params: dict,
+        compute,
+        meta: dict | None = None,
+        meta_fn=None,
+    ) -> StageRef:
+        """Reuse the output under ``key`` or publish ``compute()`` there
+        and record it in the ledger — the one path behind ``stage`` and
+        ``frame_source``. ``meta``/``meta_fn`` as in ``frame_source``."""
+        if self._published(key):
+            return self._ref(name, key, True)
+        out_dir = os.path.join(self.root, key)
+        won = self._publish(compute(), out_dir)
+        if meta_fn is not None:
+            # evaluated post-publish: observed write-time metrics exist
+            meta = {**(meta or {}), **(meta_fn() or {})}
         entry = {
             "key": key,
             "name": name,
@@ -402,11 +409,11 @@ class PipelineManifest:
             "path": out_dir,
             "written_at": time.time(),
         }
+        if meta:
+            entry["meta"] = meta
         if won or key not in self._entries:
             self._append(entry)
-        return StageRef(
-            name=name, key=key, df=out, path=out_dir, from_cache=not won
-        )
+        return self._ref(name, key, not won)
 
     def _publish(self, df: DataFrame, out_dir: str) -> bool:
         """Materialize ``df`` at ``out_dir`` atomically: write to a
@@ -460,18 +467,9 @@ class PipelineManifest:
     def by_key(self, key: str) -> StageRef | None:
         """StageRef for an already-materialized stage by its content
         key, or None when the key is unknown or its parquet is gone."""
-        e = self._entries.get(key)
-        if e is None or not e.get("path"):
+        if not self._published(key):
             return None
-        if not os.path.exists(os.path.join(e["path"], "_SUCCESS")):
-            return None
-        return StageRef(
-            name=e.get("name", ""),
-            key=key,
-            df=self.spark.read.parquet(e["path"]),
-            path=e["path"],
-            from_cache=True,
-        )
+        return self._ref(self._entries[key].get("name", ""), key, True)
 
     def entries_named(self, name: str) -> list[dict]:
         """All ledger rows named ``name`` whose parquet still exists,
@@ -480,9 +478,7 @@ class PipelineManifest:
         out = [
             e
             for e in self._entries.values()
-            if e.get("name") == name
-            and e.get("path")
-            and os.path.exists(os.path.join(e["path"], "_SUCCESS"))
+            if e.get("name") == name and self._published(e["key"])
         ]
         out.sort(key=lambda e: e.get("written_at", 0))
         return out
@@ -538,9 +534,7 @@ class PipelineManifest:
         removed = []
         for k in list(self._entries):
             if k not in keep:
-                path = self._entries[k].get("path")
-                if path and os.path.isdir(path):
-                    shutil.rmtree(path, ignore_errors=True)
+                shutil.rmtree(os.path.join(self.root, k), ignore_errors=True)
                 del self._entries[k]
                 removed.append(k)
         with open(os.path.join(self.root, self._LEDGER), "w") as fh:

@@ -10,7 +10,7 @@ preprocessed signal and betas).
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field, replace
+from dataclasses import dataclass, replace
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -48,12 +48,10 @@ def _stage_dye_bias(spark, sig, mode="linear"):
     raise ValueError(f"dye_bias must be 'linear' or 'nl': {mode!r}")
 
 
-def _stage_noob(spark, sig, masks, use_negative_controls=True, offset=15.0):
+def _stage_noob(spark, sig, masks, offset=15.0):
     from pylluminator_spark import preprocessing as pp
 
-    return pp.noob_background_correction(
-        sig, masks, use_negative_controls, offset
-    )
+    return pp.noob_background_correction(sig, masks, offset=offset)
 
 
 def _stage_poobah_mask(spark, sig, masks, threshold=0.05):
@@ -77,6 +75,23 @@ def _stage_betas(spark, sig, include_out_of_band=False):
         "probe_type",
         beta_expr(meth, unmeth).alias("beta"),
     )
+
+
+def _chain(stage, sig, masks, *, infer_channel, dye_bias, noob, noob_offset, poobah_threshold):
+    """The preprocessing chain, written once: infer channel -> dye bias ->
+    NOOB -> pOOBAH (SURVEY §3.2). ``stage(name, fn, inputs, params)`` runs
+    one step: in memory for ``preprocess``, through the stage store for
+    ``run_pipeline``. Returns ``(signal, poobah_mask or None)``."""
+    if infer_channel:
+        sig = stage("infer_channel", _stage_infer_channel, [sig], {})
+    if dye_bias is not None:
+        sig = stage("dye_bias", _stage_dye_bias, [sig], {"mode": dye_bias})
+    if noob:
+        sig = stage("noob", _stage_noob, [sig, masks], {"offset": noob_offset})
+    if poobah_threshold is None:
+        return sig, None
+    pb = stage("poobah_mask", _stage_poobah_mask, [sig, masks], {"threshold": poobah_threshold})
+    return sig, pb
 
 
 def assemble_signal(
@@ -626,17 +641,19 @@ class MethylSession:
         downstream DM/CNV, and without the cache every consumer re-runs the
         whole lineage (measured 4x slower at 6M rows,
         tests/test_scale_pipeline.py). ``dye_bias``: 'linear' | 'nl' | None.
-        pOOBAH failures (p >= threshold) land in the masks table.
+        pOOBAH failures (p >= threshold) land in the masks table. The
+        steps are ``run_pipeline``'s ``_chain``, run in memory.
         """
-        sess = self.infer_type1_channel() if infer_channel else self
-        if dye_bias is not None:
-            sess = sess.with_signal(_stage_dye_bias(self.spark, sess.signal, dye_bias))
-        if noob:
-            sess = sess.noob_background_correction()
-        sess = sess.persist()
-        if poobah_threshold is not None:
-            sess = sess.poobah(threshold=poobah_threshold)
-        return sess
+        sig, pb = _chain(
+            lambda _name, fn, inputs, params: fn(self.spark, *inputs, **params),
+            self.signal, self.masks, infer_channel=infer_channel, dye_bias=dye_bias,
+            noob=noob, noob_offset=15.0, poobah_threshold=poobah_threshold,
+        )
+        sess = self.with_signal(sig).persist()  # before any action: pOOBAH reads the cache
+        if pb is None:
+            return sess
+        masks = self.masks if self.masks is not None else mask_ops.empty_masks(self.spark)
+        return replace(sess, masks=masks.unionByName(pb))
 
     def run_pipeline(
         self,
@@ -646,15 +663,16 @@ class MethylSession:
         infer_channel: bool = True,
         dye_bias: str | None = "linear",
         noob: bool = True,
-        use_negative_controls: bool = True,
         noob_offset: float = 15.0,
         poobah_threshold: float | None = 0.05,
         include_out_of_band: bool = False,
     ) -> tuple["MethylSession", dict]:
         """``preprocess`` + ``calculate_betas`` as a CONTENT-ADDRESSED
-        pipeline over a ``plans.manifest.PipelineManifest``: every stage
-        (infer channel -> dye bias -> NOOB -> pOOBAH -> betas) writes a
-        parquet output keyed by (stage code, params, input keys), so
+        pipeline over a ``plans.manifest.PipelineManifest``: the same
+        ``_chain`` as ``preprocess`` (infer channel -> dye bias -> NOOB ->
+        pOOBAH, negative controls in both), then betas; every stage writes
+        a parquet output under the store's root keyed by (stage code,
+        params, input keys), so
 
         - re-running an unchanged pipeline reads every stage from the
           store and recomputes nothing;
@@ -684,6 +702,11 @@ class MethylSession:
         stage name so callers can assert cache behavior
         (``refs["betas"].from_cache``)."""
         refs: dict = {}
+
+        def stage(name, fn, inputs, params):
+            ref = refs[name] = manifest.stage(name, fn, inputs, params)
+            return ref
+
         cur = refs["signal"] = manifest.frame_source(
             "signal", self.signal, source_fingerprint
         )
@@ -699,11 +722,8 @@ class MethylSession:
         if self.masks is not None and self.masks.sameSemantics(
             min_beads_masks(self.signal, self.min_beads)
         ):
-            masks_ref = refs["masks"] = manifest.stage(
-                "masks",
-                _stage_min_beads_masks,
-                [refs["signal"]],
-                {"min_beads": self.min_beads},
+            masks_ref = stage(
+                "masks", _stage_min_beads_masks, [cur], {"min_beads": self.min_beads}
             )
         else:
             if self.masks is not None:
@@ -717,42 +737,19 @@ class MethylSession:
             masks_ref = refs["masks"] = manifest.frame_source(
                 "masks", masks_df, masks_fp
             )
-        if infer_channel:
-            cur = refs["infer_channel"] = manifest.stage(
-                "infer_channel", _stage_infer_channel, [cur], {}
-            )
-        if dye_bias is not None:
-            cur = refs["dye_bias"] = manifest.stage(
-                "dye_bias", _stage_dye_bias, [cur], {"mode": dye_bias}
-            )
-        if noob:
-            cur = refs["noob"] = manifest.stage(
-                "noob",
-                _stage_noob,
-                [cur, masks_ref],
-                {
-                    "use_negative_controls": use_negative_controls,
-                    "offset": noob_offset,
-                },
-            )
+        cur, pb = _chain(
+            stage, cur, masks_ref, infer_channel=infer_channel, dye_bias=dye_bias,
+            noob=noob, noob_offset=noob_offset, poobah_threshold=poobah_threshold,
+        )
         # masks reuse point: union the STORE-BACKED masks parquet
         # (masks_ref.df) with the poobah stage output — not self.masks,
         # which would drag the original in-memory lineage along and
         # break the "everything comes from the store" contract below
         new_masks = masks_ref.df if self.masks is not None else None
-        if poobah_threshold is not None:
-            pb = refs["poobah_mask"] = manifest.stage(
-                "poobah_mask",
-                _stage_poobah_mask,
-                [cur, masks_ref],
-                {"threshold": poobah_threshold},
-            )
+        if pb is not None:
             new_masks = masks_ref.df.unionByName(pb.df)
-        betas_ref = refs["betas"] = manifest.stage(
-            "betas",
-            _stage_betas,
-            [cur],
-            {"include_out_of_band": include_out_of_band},
+        betas_ref = stage(
+            "betas", _stage_betas, [cur], {"include_out_of_band": include_out_of_band}
         )
         sess = replace(
             self, signal=cur.df, masks=new_masks, betas_df=betas_ref.df

@@ -28,8 +28,6 @@ All citations are into /root/reference/pylluminator/.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import numpy as np
 import pandas as pd
 
@@ -57,14 +55,6 @@ def _ib_cells():
     t, ch = F.col("type"), F.col("channel")
     m = F.when(t == "II", F.col("mg")).when(ch == "G", F.col("mg")).otherwise(F.col("mr"))
     u = F.when(t == "II", F.col("ur")).when(ch == "G", F.col("ug")).otherwise(F.col("ur"))
-    return m, u
-
-
-def _oob_cells():
-    """Out-of-band cells: type I only, opposite channel."""
-    ch = F.col("channel")
-    m = F.when(ch == "G", F.col("mr")).otherwise(F.col("mg"))
-    u = F.when(ch == "G", F.col("ur")).otherwise(F.col("ug"))
     return m, u
 
 

@@ -39,11 +39,16 @@ def read_sample_sheet(
     elif len(data_rows) > 1:
         raise ValueError("several [Data] lines found in sample sheet")
     raw.columns = [_snake_case(c) for c in raw.columns]
+    # Illumina's ``SentrixBarcode_A`` / ``SentrixPosition_A`` headers
+    # snake_case to ``sentrix_barcode_a`` / ``sentrix_position_a``
     raw = raw.rename(
         columns={
             "sentrixposition_a": "sentrix_position",
+            "sentrix_position_a": "sentrix_position",
             "sentrixbarcode": "sentrix_id",
+            "sentrix_barcode": "sentrix_id",
             "sentrixbarcode_a": "sentrix_id",
+            "sentrix_barcode_a": "sentrix_id",
         }
     )
     if "sample_id" not in raw.columns:

@@ -155,6 +155,35 @@ def test_gc_keeps_chain_drops_orphans(spark, tmp_path):
     assert not re.from_cache and c["n"] == 1
 
 
+def test_moved_store_keeps_hits_and_chain_walks(spark, tmp_path):
+    """Stage paths derive from the store root, not from the ledger: after
+    the store directory moves, stage hits, ``by_key``, ``entries_named``
+    and ``gc`` all work under the new root."""
+    root_a, root_b = str(tmp_path / "a"), str(tmp_path / "b")
+    docs = spark.createDataFrame(
+        [("aa", 10), ("bb", 3)], "lang string, n_chars int"
+    )
+    m = PipelineManifest(spark, root_a)
+    src = m.frame_source("docs", docs, "v1")
+    keep = m.stage("stats", _stats_fn, [src], {"min_chars": 0})
+    orphan = m.stage("stats", _stats_fn, [src], {"min_chars": 5})
+    os.rename(root_a, root_b)
+
+    m2 = PipelineManifest(spark, root_b)
+    ref = m2.by_key(keep.key)
+    assert ref is not None and ref.name == "stats" and ref.from_cache
+    assert ref.path == os.path.join(root_b, keep.key)
+    assert {tuple(r) for r in ref.df.collect()} == {("aa", 1), ("bb", 1)}
+    assert [e["key"] for e in m2.entries_named("stats")] == [
+        keep.key, orphan.key
+    ]
+    src2 = m2.frame_source("docs", docs, "v1")
+    assert m2.stage("stats", _stats_fn, [src2], {"min_chars": 0}).from_cache
+    assert m2.gc({keep.key}) == [orphan.key]
+    assert not os.path.isdir(os.path.join(root_b, orphan.key))
+    assert os.path.isdir(os.path.join(root_b, keep.key))
+
+
 def test_default_arg_change_invalidates(spark, tmp_path):
     """ADVICE r7: fn.__defaults__ / __kwdefaults__ are part of the
     fingerprint — changing a default must change the stage key."""

@@ -228,24 +228,42 @@ def test_selectors(session):
     assert ctl_free.count() == signal.filter(F.col("probe_type") == "cg").count()
 
 
-def test_idat_python_datasource(spark, idat_dir):
-    """spark.read.format('idat') — Spark 4 Python DataSource — must produce
-    exactly the rows of the binaryFile+mapInPandas scan."""
-    from pylluminator_spark.sources.idat_datasource import IdatDataSource
+def test_read_sample_sheet_illumina_plain_and_missing_id(spark, tmp_path):
+    """read_sample_sheet skips a padded ``[Header]...[Data]`` preamble and
+    maps Illumina's ``SentrixBarcode_A`` / ``SentrixPosition_A`` headers
+    to ``sentrix_id`` / ``sentrix_position``; a plain CSV reads as is; a
+    sheet without ``sample_id`` raises."""
+    from pylluminator_spark.sources.sample_sheet import read_sample_sheet
 
-    spark.dataSource.register(IdatDataSource)
-    via_ds = spark.read.format("idat").load(f"{idat_dir}/*.idat*")
-    assert via_ds.schema.simpleString() == (
-        "struct<sample:string,channel:string,illumina_id:int,"
-        "mean_value:float,std_dev:float,n_beads:int>"
+    illumina = tmp_path / "illumina.csv"
+    illumina.write_text(
+        "[Header],,,,\n"
+        "Investigator Name,someone,,,\n"
+        "Date,2020-01-01,,,\n"
+        "[Data],,,,\n"
+        "Sample_ID,Sample_Name,SentrixBarcode_A,SentrixPosition_A,Sample_Group\n"
+        "s1,A,200000000001,R01C01,control\n"
+        "s2,B,200000000001,R02C01,case\n"
     )
-    # one input partition per file
-    assert via_ds.rdd.getNumPartitions() == len(SAMPLES) * 2
-    a = sorted(map(tuple, via_ds.collect()))
-    b = sorted(
-        map(tuple, read_idat_files(spark, f"{idat_dir}/*.idat*").collect())
-    )
-    assert a == b
+    df = read_sample_sheet(spark, str(illumina))
+    assert df.columns == [
+        "sample_id", "sample_name", "sentrix_id", "sentrix_position", "sample_group"
+    ]
+    assert sorted(map(tuple, df.collect())) == [
+        ("s1", "A", 200000000001, "R01C01", "control"),
+        ("s2", "B", 200000000001, "R02C01", "case"),
+    ]
+
+    plain = tmp_path / "plain.csv"
+    plain.write_text("sample_id,sentrix_id,sentrix_position\ns1,2001,R01C01\n")
+    df = read_sample_sheet(spark, str(plain))
+    assert df.columns == ["sample_id", "sentrix_id", "sentrix_position"]
+    assert [tuple(r) for r in df.collect()] == [("s1", 2001, "R01C01")]
+
+    missing = tmp_path / "missing.csv"
+    missing.write_text("name,group\na,b\n")
+    with pytest.raises(ValueError, match="sample_id"):
+        read_sample_sheet(spark, str(missing))
 
 
 def test_session_preprocess_chain(session):

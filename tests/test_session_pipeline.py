@@ -153,3 +153,32 @@ def test_pipeline_masks_are_store_backed(spark, signal, tmp_path):
         poobah_threshold=0.05,
     )
     assert piped.masks.count() == ref.masks.count()
+
+
+def test_chain_uses_negative_controls_in_noob_and_poobah(spark, signal, tmp_path):
+    """The chain always uses negative controls, in NOOB and in pOOBAH (the
+    reference defaults): the ``noob`` and ``poobah_mask`` stages equal the
+    kernels run with ``use_negative_controls=True``, and ``False`` gives a
+    different NOOB, so the fixture tells the two apart."""
+    from pylluminator_spark import preprocessing as pp
+
+    sess = MethylSession(spark=spark, signal=signal)
+    m = PipelineManifest(spark, str(tmp_path / "pl"))
+    _, refs = sess.run_pipeline(m, source_fingerprint="fixture-v1")
+    dyed, masks = refs["dye_bias"].df, refs["masks"].df
+
+    got = _betas_pdf(refs["noob"].df)
+    want = _betas_pdf(
+        pp.noob_background_correction(dyed, masks, use_negative_controls=True)
+    )
+    pd.testing.assert_frame_equal(got, want, check_exact=True)
+    without = _betas_pdf(
+        pp.noob_background_correction(dyed, masks, use_negative_controls=False)
+    )
+    assert not got.equals(without)
+
+    _pvals, pb = pp.poobah(
+        refs["noob"].df, masks, use_negative_controls=True, threshold=0.05
+    )
+    got_pb = sorted(map(tuple, refs["poobah_mask"].df.collect()))
+    assert got_pb and got_pb == sorted(map(tuple, pb.collect()))
