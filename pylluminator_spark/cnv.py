@@ -154,7 +154,6 @@ def _merge_bins_numpy(
     starts: np.ndarray,
     ends: np.ndarray,
     counts: np.ndarray,
-    probe_pos: np.ndarray,
     minimum_overlap: int,
 ) -> list[tuple[int, int, int]]:
     """Greedy adjacent-bin merge until every bin has >= minimum_overlap
@@ -191,7 +190,6 @@ def _merge_bins_numpy(
                 changed = True
                 continue
             i += 1
-    _ = probe_pos
     return [
         (int(s), int(e), int(c))
         for s, e, c in zip(starts, ends, counts)
@@ -226,7 +224,6 @@ def make_bins(
             pdf["start"].to_numpy(),
             pdf["end"].to_numpy(),
             pdf["n_probes"].to_numpy(),
-            np.array([]),
             minimum_overlap,
         )
         return pd.DataFrame(
@@ -395,15 +392,12 @@ def _cbs_segment_chrom(
             segments.append((lo, hi))
             return
         k, t_obs = res
-        # permutation test: max-t distribution under shuffling
+        # permutation test: max-t distribution under shuffling. A
+        # permutation keeps len(x) and the pooled std, so _cbs_t_stats of
+        # a shuffle is never None once it is not None for x.
         n_perm = min(shuffles, 2000)
         perm = np.array(
-            [
-                _cbs_t_stats(rng.permutation(x))[1]
-                if _cbs_t_stats(rng.permutation(x)) is not None
-                else 0.0
-                for _ in range(n_perm)
-            ]
+            [_cbs_t_stats(rng.permutation(x))[1] for _ in range(n_perm)]
         )
         p_val = (perm >= t_obs).mean()
         if p_val <= p and 0 < k < len(x):

@@ -3,13 +3,18 @@ BH adjustment, change-point segmentation, and DMR aggregates.
 
 Reference: /root/reference/pylluminator/dm.py. Spark-first decomposition:
 
-- **DMP fit (K9)**: the design matrix X (n_samples x k) is shared across all
-  probes, so (X'X)^-1 X' is precomputed once on the driver and broadcast;
-  per-probe coefficients/SE/t/p are vectorized numpy over Arrow batches in a
-  grouped-map pandas UDF partitioned by probe. The reference fans out with
-  joblib above 10k probes (dm.py:449-456) — here it is ordinary shuffle
-  parallelism. t/F p-values use a scipy-free regularized incomplete beta.
-- **BH (K11/A14)** — window math (functions.stats.bh_adjust).
+- **DMP fit (K9)**: probes that share a missingness pattern share the
+  design rows they keep (reference OLS ``missing='drop'``, dm.py:65-67), so
+  each Arrow batch groups its probes by NaN pattern (``_patterns``) and
+  fits every pattern as one vectorized numpy block; a probe with complete
+  data is just the all-present pattern. The batches are a grouped-map
+  pandas UDF over probe buckets. The reference fans out with joblib above
+  10k probes (dm.py:449-456) — here it is ordinary shuffle parallelism.
+  t/F p-values use a scipy-free regularized incomplete beta.
+- **BH (K11/A14)** — window math (functions.stats.bh_adjust), per factor
+  and per DMR contrast, with R ``p.adjust("BH")`` semantics: ``n`` counts
+  the non-null p-values and a NULL p (a probe or segment without a fit)
+  stays NULL.
 - **Segmentation (W1)**: per-sample windows ordered by genome position give
   lead-differences (crossing chromosome boundaries, matching the reference's
   un-partitioned ``diff(-1)`` dm.py:569-575); global segment ids come from
@@ -20,12 +25,13 @@ Reference: /root/reference/pylluminator/dm.py. Spark-first decomposition:
   column math (functions.stats.stouffer_combine).
 
 - **MixedLM (K9, group_column random effects, reference dm.py:61-67)**: a
-  pure-numpy one-random-intercept REML fit. The per-group Sherman-Morrison
-  identity collapses V*^-1 to group sums, so the variance-ratio profile is
-  vectorized across every probe in an Arrow batch simultaneously (grid +
-  golden-section refinement); no statsmodels dependency. Wald z p-values,
-  matching statsmodels MixedLM conventions (f_pvalue is NaN for mixed fits,
-  as the reference returns None there).
+  pure-numpy one-random-intercept REML fit (``mixedlm_fit_patterns``). The
+  per-group Sherman-Morrison identity collapses V*^-1 to group sums, so
+  every missingness pattern of an Arrow batch contributes its design
+  statistics and all probes share one vectorized variance-ratio profile
+  (grid + golden-section refinement); no statsmodels dependency. Wald z
+  p-values, matching statsmodels MixedLM conventions (f_pvalue is NaN for
+  mixed fits, as the reference returns None there).
 """
 
 from __future__ import annotations
@@ -45,6 +51,23 @@ from pylluminator_spark.operators.ordered import with_global_rank, with_lead
 # Design matrix (patsy-compatible naming, reference dm.py:433-443)
 # ---------------------------------------------------------------------------
 
+def _rhs_terms(formula: str) -> list[str]:
+    """Right-hand-side terms of ``~ a + b + ...`` (an intercept ``1`` is
+    implicit and dropped)."""
+    rhs = formula.split("~", 1)[-1]
+    return [t.strip() for t in rhs.split("+") if t.strip() and t.strip() != "1"]
+
+
+def _levels(col: pd.Series, term: str, reference_value: dict | None) -> list:
+    """Sorted levels of a categorical factor, the reference level first
+    (reference dm.py:421-432)."""
+    levels = sorted(col.dropna().unique().tolist())
+    if reference_value and term in reference_value:
+        ref = reference_value[term]
+        levels = [ref] + [lv for lv in levels if lv != ref]
+    return levels
+
+
 def build_design_matrix(
     sheet: pd.DataFrame,
     formula: str,
@@ -57,22 +80,16 @@ def build_design_matrix(
     reference level is the first sorted level, overridable via
     ``reference_value`` (reference dm.py:421-432).
     """
-    rhs = formula.split("~", 1)[1] if "~" in formula else formula
-    terms = [t.strip() for t in rhs.split("+") if t.strip() and t.strip() != "1"]
     out = pd.DataFrame(index=sheet.index)
     out["Intercept"] = 1.0
-    for term in terms:
+    for term in _rhs_terms(formula):
         if term not in sheet.columns:
             raise KeyError(f"factor {term!r} not found in sample sheet")
         col = sheet[term]
         if pd.api.types.is_numeric_dtype(col):
             out[term] = col.astype("float64")
         else:
-            levels = sorted(col.dropna().unique().tolist())
-            if reference_value and term in reference_value:
-                ref = reference_value[term]
-                levels = [ref] + [lv for lv in levels if lv != ref]
-            for level in levels[1:]:
+            for level in _levels(col, term, reference_value)[1:]:
                 out[f"{term}[T.{level}]"] = (col == level).astype("float64")
     # drop all-zero columns (absent categories, reference dm.py:437-438)
     out = out[[c for c in out.columns if not (out[c].to_numpy() == 0).all()]]
@@ -170,62 +187,15 @@ def norm_sf_two_sided(z: np.ndarray) -> np.ndarray:
     return np.where(np.isnan(z), np.nan, out)
 
 
-def mixedlm_fit_block(
-    y: np.ndarray,
-    x: np.ndarray,
-    group_codes: np.ndarray,
-    n_grid: int = 21,
-    n_refine: int = 28,
-) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
-    """Vectorized one-random-intercept linear mixed model, REML.
-
-    ``y``: (p, n) responses with no NaNs; ``x``: (n, k) design matrix;
-    ``group_codes``: (n,) integer group labels. Returns ``(coef, se, tval,
-    pval)``, each (p, k); rows where the fit is singular are NaN (the
-    reference returns NaN on LinAlgError, dm.py:68-69).
-
-    Model: y = X b + Z u + e with u ~ N(0, s_u^2 I_G), e ~ N(0, s_e^2 I_n).
-    Writing lam = s_u^2 / s_e^2 and V* = I + lam Z Z', the per-group
-    Sherman-Morrison identity gives V*^-1 = I - sum_g c_g J_g with
-    c_g = lam / (1 + lam n_g), so every REML quantity reduces to group sums:
-    each lambda evaluation is O(p * G * k^2) with no n x n matrices — the
-    whole Arrow batch of probes shares one profile pass. The profiled REML
-    criterion minimized over lam is
-
-        (n-k) log s2_hat(lam) + sum_g log(1 + lam n_g) + logdet(X'V*^-1 X)
-
-    (equivalent to statsmodels MixedLM(..).fit(reml=True)); inference uses
-    Wald z like statsmodels MixedLM (normal, not t).
-    """
-    y = np.asarray(y, dtype="float64")
-    x = np.asarray(x, dtype="float64")
-    p, n = y.shape
-    k = x.shape[1]
-    if n <= k:
-        nan = np.full((p, k), np.nan)
-        return nan, nan.copy(), nan.copy(), nan.copy()
-    codes, inv = np.unique(group_codes, return_inverse=True)
-    g_count = len(codes)
-    ind = np.zeros((n, g_count))
-    ind[np.arange(n), inv] = 1.0
-    n_g = ind.sum(axis=0)  # (G,)
-    s_mat = ind.T @ x  # (G, k) per-group column sums of X
-    xtx = x.T @ x
-    a_mat = y @ x  # (p, k)  X'y per probe
-    t_mat = y @ ind  # (p, G) per-group sums of y
-    yy = (y * y).sum(axis=1)  # (p,)
-    dof = n - k
-    return _mixedlm_profile(
-        np.broadcast_to(xtx, (p, k, k)),
-        np.broadcast_to(s_mat, (p, g_count, k)),
-        np.broadcast_to(n_g, (p, g_count)),
-        a_mat,
-        t_mat,
-        yy,
-        np.full(p, float(dof)),
-        n_grid,
-        n_refine,
+def _patterns(y_mat: np.ndarray) -> list[tuple[np.ndarray, np.ndarray]]:
+    """Rows of ``y_mat`` grouped by NaN pattern, in order of first
+    appearance: ``(present, rows)`` pairs with ``present`` the (n,) mask
+    of non-NaN columns and ``rows`` the ascending row indices."""
+    nan_rows, first, inv = np.unique(
+        np.isnan(y_mat), axis=0, return_index=True, return_inverse=True
     )
+    inv = inv.reshape(-1)
+    return [(~nan_rows[g], np.flatnonzero(inv == g)) for g in np.argsort(first)]
 
 
 def mixedlm_fit_patterns(
@@ -235,22 +205,37 @@ def mixedlm_fit_patterns(
     n_grid: int = 21,
     n_refine: int = 28,
 ) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
-    """``mixedlm_fit_block`` over rows with ARBITRARY per-row
-    missingness, in ONE profiled search. Returns (coef, se, tval, pval),
-    each (p, k), NaN rows where the fit is undefined (all values
-    missing, or fewer present rows than design columns).
+    """Vectorized one-random-intercept linear mixed model, REML, over
+    rows with arbitrary per-row missingness.
 
-    The REML criterion depends on the data only through per-probe group
-    sums, so each distinct missingness pattern contributes its
-    pattern-level design statistics (the same BLAS products the
-    per-pattern kernel computed) and every probe then rides a single
-    batched grid + golden-section pass. The per-pattern form re-ran the
-    full 80-odd-evaluation search once per pattern — at 7 samples that
-    is up to 127 patterns, and numpy dispatch overhead on the tiny
-    per-pattern batches dominated the whole fit (~100x the useful
-    arithmetic). Group indicator columns absent from a pattern carry
-    exact zeros through every reduction, so results are bitwise
-    identical to the per-pattern kernel."""
+    ``y_mat``: (p, n) responses, NaN where missing; ``x``: (n, k) design
+    matrix; ``group_codes``: (n,) integer group labels. Returns ``(coef,
+    se, tval, pval)``, each (p, k); rows where the fit is undefined (all
+    values missing, fewer present values than design columns, or a
+    singular fit) are NaN (the reference returns NaN on LinAlgError,
+    dm.py:68-69).
+
+    Model: y = X b + Z u + e with u ~ N(0, s_u^2 I_G), e ~ N(0, s_e^2 I_n).
+    Writing lam = s_u^2 / s_e^2 and V* = I + lam Z Z', the per-group
+    Sherman-Morrison identity gives V*^-1 = I - sum_g c_g J_g with
+    c_g = lam / (1 + lam n_g), so every REML quantity reduces to group sums:
+    each lambda evaluation is O(p * G * k^2) with no n x n matrices. The
+    profiled REML criterion minimized over lam is
+
+        (n-k) log s2_hat(lam) + sum_g log(1 + lam n_g) + logdet(X'V*^-1 X)
+
+    (equivalent to statsmodels MixedLM(..).fit(reml=True)); inference uses
+    Wald z like statsmodels MixedLM (normal, not t).
+
+    The criterion depends on the data only through per-probe group sums,
+    so each missingness pattern (``_patterns``) contributes its
+    pattern-level design statistics and every probe then rides a single
+    batched grid + golden-section pass, instead of one 80-odd-evaluation
+    search per pattern (up to 127 patterns at 7 samples, where numpy
+    dispatch on the tiny batches dominated the fit). Group indicator
+    columns absent from a pattern carry exact zeros through every
+    reduction.
+    """
     y_mat = np.asarray(y_mat, dtype="float64")
     x = np.asarray(x, dtype="float64")
     p_rows, n = y_mat.shape
@@ -260,17 +245,12 @@ def mixedlm_fit_patterns(
     g_count = len(codes)
     ind = np.zeros((n, g_count))
     ind[np.arange(n), inv] = 1.0
-    nanmask = np.isnan(y_mat)
-    by_pattern: dict[bytes, list[int]] = {}
-    for i in range(p_rows):
-        by_pattern.setdefault(nanmask[i].tobytes(), []).append(i)
     idx_parts: list[np.ndarray] = []
     parts: list[tuple] = []
-    for key, rows in by_pattern.items():
-        mask = ~np.frombuffer(key, dtype=bool)
+    for mask, rows in _patterns(y_mat):
         nb = int(mask.sum())
-        if nb == 0 or nb <= k:
-            continue  # stays NaN, same as the per-pattern skip
+        if nb <= k:
+            continue  # stays NaN
         x_b = x[mask]
         ind_b = ind[mask]
         y_b = y_mat[np.ix_(rows, mask)]
@@ -286,7 +266,7 @@ def mixedlm_fit_patterns(
                 np.full(pb, float(nb - k)),
             )
         )
-        idx_parts.append(np.asarray(rows))
+        idx_parts.append(rows)
     if not parts:
         return nan, nan.copy(), nan.copy(), nan.copy()
     stacked = [np.concatenate([pt[i] for pt in parts]) for i in range(7)]
@@ -311,9 +291,8 @@ def _mixedlm_profile(
 ) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
     """Grid + golden-section profiled-REML search over PER-PROBE
     sufficient statistics: ``xtx`` (p,k,k), ``s_mat`` (p,G,k), ``n_g``
-    (p,G), ``a_mat`` (p,k), ``t_mat`` (p,G), ``yy`` (p,), ``dof`` (p,).
-    The shared tail of ``mixedlm_fit_block`` (one design for all rows)
-    and ``mixedlm_fit_patterns`` (per-pattern designs stacked)."""
+    (p,G), ``a_mat`` (p,k), ``t_mat`` (p,G), ``yy`` (p,), ``dof`` (p,),
+    stacked per missingness pattern by ``mixedlm_fit_patterns``."""
     p, k = a_mat.shape
 
     def crit_and_fit(lam: np.ndarray, want_fit: bool = False):
@@ -410,11 +389,7 @@ def compute_dmp(
     if sample_col in sheet.columns:
         sheet = sheet.set_index(sample_col)
     # drop samples with NA factors (reference dm.py:385-391)
-    rhs_terms = [
-        t.strip()
-        for t in formula.split("~", 1)[-1].split("+")
-        if t.strip() and t.strip() != "1"
-    ]
+    rhs_terms = _rhs_terms(formula)
     for term in rhs_terms:
         sheet = sheet[~sheet[term].isna()]
     if group_column is not None:
@@ -427,10 +402,6 @@ def compute_dmp(
     factor_names = list(design.columns)
     contrasts = factor_names[1:]
     x_mat = design.to_numpy(dtype="float64")
-    n, k = x_mat.shape
-    xtx_inv = np.linalg.pinv(x_mat.T @ x_mat)
-    pinv = xtx_inv @ x_mat.T  # k x n
-    diag_c = np.diag(xtx_inv).copy()
     # random-intercept group codes aligned to the design's sample order
     group_codes = (
         pd.factorize(sheet.loc[sample_order, group_column])[0]
@@ -442,11 +413,7 @@ def compute_dmp(
     cat_groups: list[tuple[str, str, list[str]]] = []  # (colname, level, samples)
     for term in rhs_terms:
         if not pd.api.types.is_numeric_dtype(sheet[term]):
-            levels = sorted(sheet[term].dropna().unique().tolist())
-            if reference_value and term in reference_value:
-                ref = reference_value[term]
-                levels = [ref] + [lv for lv in levels if lv != ref]
-            for level in levels:
+            for level in _levels(sheet[term], term, reference_value):
                 members = [
                     s for s in sample_order if sheet.loc[s, term] == level
                 ]
@@ -485,93 +452,46 @@ def compute_dmp(
         p_rows = y_mat.shape[0]
         out = {c: np.full(p_rows, np.nan) for c in result_cols[1:] + avg_beta_cols}
 
-        has_nan = np.isnan(y_mat).any(axis=1)
-        all_nan = np.isnan(y_mat).all(axis=1)
-
-        def _fit_block(y_block: np.ndarray, x_b, pinv_b, diag_b, idx: np.ndarray):
-            nb, kb = x_b.shape
-            if nb <= kb or len(idx) == 0:
-                return
-            coef = y_block @ pinv_b.T  # p x k
-            resid = y_block - coef @ x_b.T
-            rss = (resid**2).sum(axis=1)
-            dof = nb - kb
-            sigma2 = rss / dof
-            se = np.sqrt(np.outer(sigma2, diag_b))
-            with np.errstate(divide="ignore", invalid="ignore"):
-                t_vals = coef / se
+        def _write(idx, coef, se, t_vals, p_vals) -> None:
             # effect size: max - min over non-intercept estimates + 0
             est_no_int = np.concatenate(
                 [coef[:, 1:], np.zeros((coef.shape[0], 1))], axis=1
             )
-            out["effect_size"][idx] = est_no_int.max(axis=1) - est_no_int.min(axis=1)
-            # F statistic for overall regression (against intercept-only)
-            y_mean = y_block.mean(axis=1, keepdims=True)
-            tss = ((y_block - y_mean) ** 2).sum(axis=1)
-            d1 = kb - 1
-            with np.errstate(divide="ignore", invalid="ignore"):
-                f_stat = ((tss - rss) / d1) / (rss / dof)
-            out["f_pvalue"][idx] = f_sf(f_stat, d1, dof)
+            with np.errstate(invalid="ignore"):
+                out["effect_size"][idx] = est_no_int.max(
+                    axis=1
+                ) - est_no_int.min(axis=1)
             for j, fname in enumerate(factor_names):
                 out[f"{fname}_estimate"][idx] = coef[:, j]
                 out[f"{fname}_std_err"][idx] = se[:, j]
                 out[f"{fname}_t_value"][idx] = t_vals[:, j]
-                out[f"{fname}_p_value"][idx] = t_sf_two_sided(t_vals[:, j], dof)
+                out[f"{fname}_p_value"][idx] = p_vals[:, j]
 
         if group_codes is not None:
-            # mixed path: ALL probes (complete + every missingness
-            # pattern) ride ONE batched profiled-REML search — the
-            # per-pattern mixedlm_fit_block loop re-ran the full grid +
-            # golden-section pass per pattern (up to 127 patterns at 7
-            # samples) and its numpy dispatch overhead dominated the
-            # whole fit; results are bitwise identical (absent-group
-            # indicator columns carry exact zeros through every
-            # reduction)
-            fit_idx = np.where(~all_nan)[0]
-            if len(fit_idx) > 0:
-                coef, se, t_vals, p_vals = mixedlm_fit_patterns(
-                    y_mat[fit_idx], x_mat, group_codes
-                )
-                est_no_int = np.concatenate(
-                    [coef[:, 1:], np.zeros((coef.shape[0], 1))], axis=1
-                )
-                with np.errstate(invalid="ignore"):
-                    out["effect_size"][fit_idx] = est_no_int.max(
-                        axis=1
-                    ) - est_no_int.min(axis=1)
-                for j, fname in enumerate(factor_names):
-                    out[f"{fname}_estimate"][fit_idx] = coef[:, j]
-                    out[f"{fname}_std_err"][fit_idx] = se[:, j]
-                    out[f"{fname}_t_value"][fit_idx] = t_vals[:, j]
-                    out[f"{fname}_p_value"][fit_idx] = p_vals[:, j]
+            _write(slice(None), *mixedlm_fit_patterns(y_mat, x_mat, group_codes))
         else:
-            # fast path: probes with complete data share X
-            complete_idx = np.where(~has_nan)[0]
-            if len(complete_idx) > 0:
-                _fit_block(
-                    y_mat[complete_idx], x_mat, pinv, diag_c, complete_idx
-                )
-            # NA path: per distinct missingness pattern (reference OLS
-            # missing='drop' at reference dm.py:65-67)
-            partial_idx = np.where(has_nan & ~all_nan)[0]
-            patterns: dict[bytes, list[int]] = {}
-            for i in partial_idx:
-                key = np.isnan(y_mat[i]).tobytes()
-                patterns.setdefault(key, []).append(i)
-            for key, idx_list in patterns.items():
-                mask = ~np.frombuffer(key, dtype=bool)
+            # OLS per missingness pattern (reference OLS missing='drop',
+            # dm.py:65-67)
+            for mask, idx in _patterns(y_mat):
                 x_b = x_mat[mask]
-                if x_b.shape[0] <= x_b.shape[1]:
+                nb, kb = x_b.shape
+                if nb <= kb:
                     continue
                 xtx_b = np.linalg.pinv(x_b.T @ x_b)
-                pinv_b = xtx_b @ x_b.T
-                _fit_block(
-                    y_mat[np.ix_(idx_list, mask)],
-                    x_b,
-                    pinv_b,
-                    np.diag(xtx_b).copy(),
-                    np.asarray(idx_list),
-                )
+                y_b = y_mat[np.ix_(idx, mask)]
+                coef = y_b @ (xtx_b @ x_b.T).T  # p x k
+                rss = ((y_b - coef @ x_b.T) ** 2).sum(axis=1)
+                dof = nb - kb
+                se = np.sqrt(np.outer(rss / dof, np.diag(xtx_b)))
+                with np.errstate(divide="ignore", invalid="ignore"):
+                    t_vals = coef / se
+                _write(idx, coef, se, t_vals, t_sf_two_sided(t_vals, dof))
+                # F statistic for overall regression (against intercept-only)
+                tss = ((y_b - y_b.mean(axis=1, keepdims=True)) ** 2).sum(axis=1)
+                d1 = kb - 1
+                with np.errstate(divide="ignore", invalid="ignore"):
+                    f_stat = ((tss - rss) / d1) / (rss / dof)
+                out["f_pvalue"][idx] = f_sf(f_stat, d1, dof)
 
         for term, level, members in cat_groups:
             cols = [sample_idx[s] for s in members]

@@ -152,36 +152,34 @@ def norm_isf_expr(p: Column) -> Column:
     return -ndtri_expr(p)
 
 
-def bh_adjust(
-    df: DataFrame,
-    p_col: str,
-    out_col: str = "p_adj",
-    partition_cols: list[str] | None = None,
-) -> DataFrame:
-    """Benjamini-Hochberg FDR adjustment (reference dm.py:475-477).
+def bh_adjust(df: DataFrame, p_col: str, out_col: str = "p_adj") -> DataFrame:
+    """Benjamini-Hochberg FDR adjustment (reference dm.py:475-477), with the
+    semantics of R ``p.adjust(p, "BH")``.
 
-    ``p_adj_i = min_{j >= i}(p_(j) * n / j)`` clipped to 1, computed with two
-    window passes: ascending rank, then a reverse running minimum.
+    ``p_adj_(i) = min(1, min_{j >= i} p_(j) * n / j)`` over the ascending
+    rank ``i`` of the non-null p-values, where ``n`` counts only the
+    non-null p-values. A NULL p ranks after every value, is left out of
+    ``n`` and gets a NULL result. The reverse running minimum runs over
+    the unique rank, so tied p-values get the same adjusted value
+    whichever rank each one draws.
 
-    Scale note: with ``partition_cols=None`` this is a global sort — fine for
-    the reference's ~1M probes, and BH fundamentally requires a global order.
-    For very large inputs partition by a coarse analysis key (e.g. contrast)
-    so each window fits one task; a range-partitioned two-pass variant can
-    replace this when a single p-value vector exceeds one executor.
+    Scale note: this is a global sort, fine for the reference's ~1M
+    probes; ``operators.ordered.bh_adjust_global`` is the range-partitioned
+    path for larger vectors.
     """
-    parts = partition_cols or []
-    w_rank = Window.partitionBy(*parts).orderBy(F.col(p_col).asc())
-    w_rev = (
-        Window.partitionBy(*parts)
-        .orderBy(F.col(p_col).desc())
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    p = F.col(p_col)
+    w_rank = Window.orderBy(p.asc_nulls_last())
+    w_rev = Window.orderBy(F.col("_bh_rank").desc()).rowsBetween(
+        Window.unboundedPreceding, Window.currentRow
     )
-    w_n = Window.partitionBy(*parts) if parts else Window.partitionBy()
     return (
-        df.withColumn("_bh_n", F.count(F.when(F.col(p_col).isNotNull(), 1)).over(w_n))
+        df.withColumn("_bh_n", F.count(p).over(Window.partitionBy()))
         .withColumn("_bh_rank", F.row_number().over(w_rank))
-        .withColumn("_bh_raw", F.col(p_col) * F.col("_bh_n") / F.col("_bh_rank"))
-        .withColumn(out_col, F.least(F.lit(1.0), F.min("_bh_raw").over(w_rev)))
+        .withColumn("_bh_raw", p * F.col("_bh_n") / F.col("_bh_rank"))
+        .withColumn(
+            out_col,
+            F.when(p.isNotNull(), F.least(F.lit(1.0), F.min("_bh_raw").over(w_rev))),
+        )
         .drop("_bh_n", "_bh_rank", "_bh_raw")
     )
 

@@ -61,6 +61,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from pylluminator_spark.functions.stats import bh_adjust
+
 _PID = "_ord_pid"
 
 # Size-based execution switch (the broadcast-threshold analogue; the
@@ -521,7 +523,9 @@ def bh_adjust_global(
 ) -> DataFrame:
     """Benjamini-Hochberg adjustment with NO single-partition window
     over the data (scale path for functions.stats.bh_adjust; reference
-    dm.py:475-477).
+    dm.py:475-477). Rows with a NULL p are dropped; below
+    ``SMALL_INPUT_ROWS`` non-null rows the rest go through
+    ``functions.stats.bh_adjust``.
 
     p_adj_i = min_{j>=i}(p_(j) * n / j), clipped to 1.
 
@@ -546,32 +550,7 @@ def bh_adjust_global(
     n = nn.count()
     order = [p_col, *ties]
     if n < SMALL_INPUT_ROWS:
-        w = Window.orderBy(*[F.col(c).asc() for c in order])
-        ranked = nn.withColumn(
-            "_bh_rank", F.row_number().over(w).cast("long")
-        ).withColumn(
-            "_bh_raw",
-            F.col(p_col) * F.lit(float(n)) / F.col("_bh_rank"),
-        )
-        # suffix min as a RUNNING min over the reversed total order —
-        # NOT a (currentRow, unboundedFollowing) frame: Spark's
-        # shrinking-frame WindowExec re-scans the remaining frame per
-        # row, O(rows^2) per partition (measured 27 s vs 1.3 s on a
-        # 150 k-row input; count()-timed benches masked it because a
-        # cardinality-preserving window is pruned from a count plan).
-        # The reverse order MUST be over the unique _bh_rank, not the
-        # data columns: when ties in (p, tie_cols) don't totalize the
-        # order, a stable DESC sort keeps tied rows in the same relative
-        # order as the ASC sort — not the exact reverse — so a tied
-        # row's running min would miss its partner's smaller p*n/rank.
-        w_rev = Window.orderBy(F.col("_bh_rank").desc()).rowsBetween(
-            Window.unboundedPreceding, Window.currentRow
-        )
-        return (
-            ranked.withColumn("_bh_min", F.min("_bh_raw").over(w_rev))
-            .withColumn(out_col, F.least(F.lit(1.0), F.col("_bh_min")))
-            .drop("_bh_rank", "_bh_raw", "_bh_min")
-        )
+        return bh_adjust(nn, p_col, out_col)
     d = _bucketized(nn, order, num_partitions)
     w = Window.partitionBy(_PID).orderBy(*[F.col(c).asc() for c in order])
     local = d.withColumn("_local", F.row_number().over(w))
@@ -599,10 +578,12 @@ def bh_adjust_global(
     # new exchange), one extra in-partition sort. A (currentRow,
     # unboundedFollowing) frame is the wrong tool: Spark's
     # shrinking-frame WindowExec re-scans the remaining frame per row,
-    # O(rows^2) per bucket (see the small-path note above). Reverse
-    # over the unique in-bucket row_number `_local`, never the data
-    # columns — with ties a stable DESC sort is not the exact reverse
-    # of the rank order (see the small-path note).
+    # O(rows^2) per bucket (measured 27 s vs 1.3 s on a 150 k-row
+    # input). Reverse over the unique in-bucket row_number `_local`,
+    # never the data columns: when ties in (p, tie_cols) don't totalize
+    # the order, a stable DESC sort keeps tied rows in the same relative
+    # order as the ASC sort, so a tied row's running min would miss its
+    # partner's smaller p*n/rank.
     w_rev = Window.partitionBy(_PID).orderBy(
         F.col("_local").desc()
     ).rowsBetween(Window.unboundedPreceding, Window.currentRow)

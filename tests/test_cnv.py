@@ -187,6 +187,25 @@ def test_cbs_recovers_step(spark):
     assert segs.iloc[1]["mean_cnv"] == pytest.approx(1.0, abs=0.05)
 
 
+def test_cbs_one_statistic_per_permutation(monkeypatch):
+    """Each node of the CBS recursion scores its own split once and each
+    permutation draw once: shuffles + 1 calls of _cbs_t_stats per node."""
+    rng = np.random.RandomState(21)
+    vals = np.concatenate([rng.normal(0, 0.05, 50), rng.normal(1.0, 0.05, 50)])
+    stats = cnv._cbs_t_stats
+    calls = []
+
+    def counted(x):
+        calls.append(len(x))
+        return stats(x)
+
+    monkeypatch.setattr(cnv, "_cbs_t_stats", counted)
+    segs = cnv._cbs_segment_chrom(vals, shuffles=100)
+    # three nodes: the root splits at the step, its two halves do not
+    assert segs == [(0, 50), (50, 100)]
+    assert sorted(calls) == [50] * 101 + [50] * 101 + [100] * 101
+
+
 def test_cnv_pipeline_end_to_end(spark, cnv_fixture):
     signal, granges, seq = cnv_fixture
     target = signal.filter(F.col("sample") == "target")

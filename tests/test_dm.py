@@ -117,25 +117,87 @@ def test_compute_dmp_na_handling(betas_df):
     )
 
 
-def test_bh_adjust_matches_numpy(spark):
+def numpy_bh(p):
+    """BH oracle with R ``p.adjust("BH")`` semantics: ``n`` counts the
+    non-null p-values and a NULL (NaN) p maps to NULL."""
+    p = np.asarray(p, dtype=float)
+    out = np.full(len(p), np.nan)
+    ok = ~np.isnan(p)
+    q = p[ok]
+    n = len(q)
+    order = np.argsort(q, kind="stable")
+    ranked = q[order] * n / (np.arange(n) + 1)
+    cummin = np.minimum.accumulate(ranked[::-1])[::-1]
+    adj = np.empty(n)
+    adj[order] = np.minimum(cummin, 1)
+    out[ok] = adj
+    return out
+
+
+def _bh_cases():
     rng = np.random.RandomState(3)
-    pvals = rng.uniform(0, 1, 200)
+    uniform = rng.uniform(0, 1, 200)
+    ties = rng.choice([0.001, 0.01, 0.02, 0.05, 0.2, 0.5, 0.9], 300)
+    mixed = rng.choice([0.003, 0.04, 0.3, np.nan], 150)
+    mixed[::7] = rng.uniform(0, 1, len(mixed[::7]))
+    return {
+        "uniform": uniform,
+        "nulls": np.array([0.01, 0.02, 0.03, 0.04, np.nan, np.nan]),
+        "ties": ties,
+        "nulls_and_ties": mixed,
+    }
+
+
+@pytest.mark.parametrize("case", list(_bh_cases()))
+def test_bh_adjust_matches_numpy(spark, case):
+    pvals = _bh_cases()[case]
     df = spark.createDataFrame(
-        [(int(i), float(p)) for i, p in enumerate(pvals)], "id long, p double"
+        [(int(i), None if np.isnan(p) else float(p)) for i, p in enumerate(pvals)],
+        "id long, p double",
     )
     got = bh_adjust(df, "p").toPandas().set_index("id").sort_index()
-
-    def numpy_bh(p):
-        n = len(p)
-        order = np.argsort(p)
-        ranked = p[order] * n / (np.arange(n) + 1)
-        cummin = np.minimum.accumulate(ranked[::-1])[::-1]
-        out = np.empty(n)
-        out[order] = np.minimum(cummin, 1)
-        return out
-
+    got_adj = got["p_adj"].to_numpy(dtype=float)
     expected = numpy_bh(pvals)
-    assert np.allclose(got["p_adj"].to_numpy(), expected, rtol=1e-12)
+    np.testing.assert_array_equal(np.isnan(got_adj), np.isnan(pvals))
+    np.testing.assert_allclose(got_adj, expected, rtol=1e-12)
+
+
+def test_bh_null_p_values_from_unfit_probes(spark, dmr_inputs):
+    """A probe with a single non-null beta has no fit (NULL p); a probe
+    with coordinates but only NULL betas becomes an NA segment (NULL
+    combined p). The adjusted p-values of compute_dmp and compute_dmr
+    must be BH over the non-null raw p-values, NULL where the raw p is."""
+    betas, granges = dmr_inputs
+    extra = [(s, "cgX0001", 0.5 if s == "s0" else None) for s in SAMPLES]
+    extra += [(s, "cgX0002", None) for s in SAMPLES]
+    betas = betas.unionByName(
+        betas.sparkSession.createDataFrame(
+            extra, "sample string, probe_id string, beta double"
+        )
+    )
+    granges = granges.unionByName(
+        granges.sparkSession.createDataFrame(
+            [("cgX0001", "2", 50_000, 50_002), ("cgX0002", "2", 60_000, 60_002)],
+            "probe_id string, chromosome string, start long, end long",
+        )
+    )
+    dmps, contrasts = dm.compute_dmp(betas, SHEET, "~ sample_type")
+    segments, dmr_df = dm.compute_dmr(betas, dmps, granges, contrasts, dist_cutoff=0.1)
+    dmp_pdf = dmps.toPandas().set_index("probe_id")
+    assert np.isnan(dmp_pdf.loc["cgX0001", "sample_type[T.PREC]_p_value"])
+    assert "cgX0002" not in dmp_pdf.index
+    seg_pdf = segments.toPandas().set_index("probe_id")
+    assert "cgX0002" in seg_pdf.index
+    dmr_pdf = dmr_df.toPandas()
+    assert dmr_pdf["sample_type[T.PREC]_p_value"].isna().any()
+    for table in (dmp_pdf, dmr_pdf):
+        for fname in ("Intercept", "sample_type[T.PREC]"):
+            if f"{fname}_p_value_adjusted" not in table.columns:
+                continue
+            raw = table[f"{fname}_p_value"].to_numpy(dtype=float)
+            adj = table[f"{fname}_p_value_adjusted"].to_numpy(dtype=float)
+            np.testing.assert_array_equal(np.isnan(adj), np.isnan(raw))
+            np.testing.assert_allclose(adj, numpy_bh(raw), rtol=1e-12)
 
 
 @pytest.fixture(scope="module")
@@ -356,7 +418,7 @@ def test_mixedlm_balanced_one_way_closed_form():
     u = rng.normal(0, 0.8, (p, G))
     y = 2.0 + u[:, codes] + rng.normal(0, 0.5, (p, n))
     x = np.ones((n, 1))
-    coef, se, t, pv = dm.mixedlm_fit_block(y, x, codes)
+    coef, se, t, pv = dm.mixedlm_fit_patterns(y, x, codes)
 
     gm = y.reshape(p, G, m)
     group_means = gm.mean(axis=2)
@@ -389,7 +451,7 @@ def test_mixedlm_matches_dense_v_reference():
         + rng.normal(0, 0.7, (p, G))[:, codes]
         + rng.normal(0, 0.4, (p, n))
     )
-    coef, se, _, _ = dm.mixedlm_fit_block(y, x, codes)
+    coef, se, _, _ = dm.mixedlm_fit_patterns(y, x, codes)
 
     z = np.zeros((n, G))
     z[np.arange(n), codes] = 1.0
