@@ -104,22 +104,37 @@ def norm_logsf_expr(x: Column, mu: Column | float = 0.0, sigma: Column | float =
     return F.log(norm_sf_expr(x, mu, sigma))
 
 
-def ndtri_expr(p: Column) -> Column:
-    """Inverse standard-normal CDF (Acklam's algorithm), |rel err| < 1.15e-9.
+# Acklam (2003) coefficients of the inverse normal CDF
+_ACKLAM_A = [-3.969683028665376e01, 2.209460984245205e02, -2.759285104469687e02,
+             1.383577518672690e02, -3.066479806614716e01, 2.506628277459239e00]
+_ACKLAM_B = [-5.447609879822406e01, 1.615858368580409e02, -1.556989798598866e02,
+             6.680131188771972e01, -1.328068155288572e01]
+_ACKLAM_C = [-7.784894002430293e-03, -3.223964580411365e-01, -2.400758277161838e00,
+             -2.549732539343734e00, 4.374664141464968e00, 2.938163982698783e00]
+_ACKLAM_D = [7.784695709041462e-03, 3.224671290700398e-01, 2.445134137142996e00,
+             3.754408661907416e00]
+_P_LOW = 0.02425
 
-    Pure arithmetic — replicable verbatim in ANSI SQL for oracle parity.
-    """
-    # Coefficients (Acklam 2003)
-    a = [-3.969683028665376e01, 2.209460984245205e02, -2.759285104469687e02,
-         1.383577518672690e02, -3.066479806614716e01, 2.506628277459239e00]
-    b = [-5.447609879822406e01, 1.615858368580409e02, -1.556989798598866e02,
-         6.680131188771972e01, -1.328068155288572e01]
-    c = [-7.784894002430293e-03, -3.223964580411365e-01, -2.400758277161838e00,
-         -2.549732539343734e00, 4.374664141464968e00, 2.938163982698783e00]
-    d = [7.784695709041462e-03, 3.224671290700398e-01, 2.445134137142996e00,
-         3.754408661907416e00]
-    p_low = 0.02425
-    p_high = 1 - p_low
+
+def _ndtri_parts(p: Column) -> dict[str, Column]:
+    """The intermediates of ``ndtri(p)`` that its polynomials share, by the
+    names ``_ndtri_from`` takes: ``q_low = sqrt(-2 log p)``,
+    ``q_high = sqrt(-2 log(1 - p))`` and ``q_c = p - 0.5`` (``r = q_c^2``
+    is built from ``q_c``)."""
+    return {
+        "q_low": F.sqrt(F.lit(-2.0) * F.log(p)),
+        "q_high": F.sqrt(F.lit(-2.0) * F.log(F.lit(1.0) - p)),
+        "q_c": p - F.lit(0.5),
+    }
+
+
+def _ndtri_from(
+    p: Column, q_low: Column, q_high: Column, q_c: Column, r: Column
+) -> Column:
+    """``ndtri(p)`` from the intermediates of ``_ndtri_parts`` and
+    ``r = q_c * q_c``: each polynomial reads its argument five or six
+    times, so a caller that projects them as columns of their own
+    generates each once per row instead of inlining it at every use."""
 
     def _poly(coeffs: list[float], x: Column) -> Column:
         acc: Column = F.lit(coeffs[0])
@@ -127,24 +142,27 @@ def ndtri_expr(p: Column) -> Column:
             acc = acc * x + F.lit(cf)
         return acc
 
-    # Lower tail
-    q_low = F.sqrt(F.lit(-2.0) * F.log(p))
-    x_low = _poly(c, q_low) / (_poly(d, q_low) * q_low + F.lit(1.0))
-    # Upper tail
-    q_high = F.sqrt(F.lit(-2.0) * F.log(F.lit(1.0) - p))
-    x_high = -_poly(c, q_high) / (_poly(d, q_high) * q_high + F.lit(1.0))
-    # Central
-    q_c = p - F.lit(0.5)
-    r = q_c * q_c
-    x_c = _poly(a, r) * q_c / (_poly(b, r) * r + F.lit(1.0))
-
+    x_low = _poly(_ACKLAM_C, q_low) / (_poly(_ACKLAM_D, q_low) * q_low + F.lit(1.0))
+    x_high = -_poly(_ACKLAM_C, q_high) / (
+        _poly(_ACKLAM_D, q_high) * q_high + F.lit(1.0)
+    )
+    x_c = _poly(_ACKLAM_A, r) * q_c / (_poly(_ACKLAM_B, r) * r + F.lit(1.0))
     return (
         F.when(p <= 0, F.lit(float("-inf")))
         .when(p >= 1, F.lit(float("inf")))
-        .when(p < p_low, x_low)
-        .when(p > p_high, x_high)
+        .when(p < _P_LOW, x_low)
+        .when(p > 1 - _P_LOW, x_high)
         .otherwise(x_c)
     )
+
+
+def ndtri_expr(p: Column) -> Column:
+    """Inverse standard-normal CDF (Acklam's algorithm), |rel err| < 1.15e-9.
+
+    Pure arithmetic — replicable verbatim in ANSI SQL for oracle parity.
+    """
+    parts = _ndtri_parts(p)
+    return _ndtri_from(p, **parts, r=parts["q_c"] * parts["q_c"])
 
 
 def norm_isf_expr(p: Column) -> Column:
@@ -196,15 +214,30 @@ def stouffer_combine(
     one keeps its p-value unchanged (dm.py:33-34). Pure column math — the
     reference comments this step "might take a few minutes" (dm.py:622)
     single-threaded; here it is one shuffle-partial aggregation.
+
+    Each shared subexpression is a projection of its own, below the
+    aggregate the intermediates of ``isf(p)`` and ``z`` itself, above it
+    ``v = Z / sqrt(2)``, ``|v|``, ``t`` and the erfc tail (the pattern of
+    ``preprocessing._norm_exp_convolution``). Inlined, the sum's argument
+    alone generates one method over HotSpot's 8,000-byte limit for JIT
+    compilation.
     """
-    z = norm_isf_expr(F.col(p_col))
-    agg = df.groupBy(*group_cols).agg(
-        F.sum(z).alias("_z_sum"),
-        F.count(F.when(F.col(p_col).isNotNull(), 1)).alias("_k"),
-        F.first(F.col(p_col), ignorenulls=True).alias("_p_first"),
+    p = F.col(p_col)
+    staged = df.withColumns({f"_{k}": v for k, v in _ndtri_parts(p).items()})
+    staged = staged.withColumn("_r", F.col("_q_c") * F.col("_q_c"))
+    z = -_ndtri_from(p, *(F.col(c) for c in ("_q_low", "_q_high", "_q_c", "_r")))
+    agg = staged.withColumn("_z", z).groupBy(*group_cols).agg(
+        F.sum("_z").alias("_z_sum"),
+        F.count(F.when(p.isNotNull(), 1)).alias("_k"),
+        F.first(p, ignorenulls=True).alias("_p_first"),
     )
-    combined = norm_sf_expr(F.col("_z_sum") / F.sqrt(F.col("_k")))
+    # sf(Z) = 0.5 * erfc(v), v = Z / sqrt(2), Z = z_sum / sqrt(k)
+    v = F.col("_v")
+    agg = agg.withColumn("_v", F.col("_z_sum") / F.sqrt(F.col("_k")) / F.lit(SQRT2))
+    agg = agg.withColumn("_abs", F.abs(v)).withColumn("_t", erfc_t_expr(F.col("_abs")))
+    agg = agg.withColumn("_tail", erfc_tail_expr(F.col("_abs"), F.col("_t")))
+    combined = F.lit(0.5) * erfc_from_tail(v, F.col("_tail"))
     return agg.withColumn(
         out_col,
         F.when(F.col("_k") <= 1, F.col("_p_first")).otherwise(combined),
-    ).drop("_z_sum", "_p_first")
+    ).drop("_z_sum", "_p_first", "_v", "_abs", "_t", "_tail")

@@ -35,6 +35,7 @@ import time
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import ArrayType, MapType, StructField, StructType
 
 
 def _canon(obj) -> str:
@@ -95,6 +96,25 @@ def _fn_fingerprint(fn) -> str:
         h.update(f"|kw:{k}:".encode())
         h.update(_const_repr((fn.__kwdefaults__ or {})[k]))
     return h.hexdigest()[:12]
+
+
+def _read_back_schema(dt):
+    """``dt`` as a Parquet read gives it back: every struct field, array
+    element and map value nullable, at every depth."""
+    if isinstance(dt, StructType):
+        return StructType(
+            [
+                StructField(f.name, _read_back_schema(f.dataType), True, f.metadata)
+                for f in dt.fields
+            ]
+        )
+    if isinstance(dt, ArrayType):
+        return ArrayType(_read_back_schema(dt.elementType), True)
+    if isinstance(dt, MapType):
+        return MapType(
+            _read_back_schema(dt.keyType), _read_back_schema(dt.valueType), True
+        )
+    return dt
 
 
 def source_fingerprint(path: str) -> str:
@@ -370,12 +390,21 @@ class PipelineManifest:
         )
 
     def _ref(self, name: str, key: str, from_cache: bool) -> StageRef:
-        """StageRef over the stage parquet of ``key`` under this root."""
+        """StageRef over the stage parquet of ``key`` under this root.
+        The schema recorded in the ledger entry spares the read its
+        schema-inference job while the parquet's file listing is the one
+        recorded with it; an entry without them (written before schemas
+        were recorded) or a parquet rewritten in place falls back to
+        inference."""
         out_dir = os.path.join(self.root, key)
+        reader = self.spark.read
+        e = self._entries.get(key, {})
+        if "schema" in e and e.get("listing") == source_fingerprint(out_dir):
+            reader = reader.schema(StructType.fromJson(json.loads(e["schema"])))
         return StageRef(
             name=name,
             key=key,
-            df=self.spark.read.parquet(out_dir),
+            df=reader.parquet(out_dir),
             path=out_dir,
             from_cache=from_cache,
         )
@@ -396,7 +425,8 @@ class PipelineManifest:
         if self._published(key):
             return self._ref(name, key, True)
         out_dir = os.path.join(self.root, key)
-        won = self._publish(compute(), out_dir)
+        df = compute()
+        won = self._publish(df, out_dir)
         if meta_fn is not None:
             # evaluated post-publish: observed write-time metrics exist
             meta = {**(meta or {}), **(meta_fn() or {})}
@@ -408,6 +438,8 @@ class PipelineManifest:
             "params": params,
             "path": out_dir,
             "written_at": time.time(),
+            "schema": _read_back_schema(df.schema).json(),
+            "listing": source_fingerprint(out_dir),
         }
         if meta:
             entry["meta"] = meta

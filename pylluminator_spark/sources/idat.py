@@ -124,8 +124,17 @@ def sample_channel_from_path(path: str) -> tuple[str, str]:
 
 def read_idat_files(spark: SparkSession, path_glob: str) -> DataFrame:
     """Distributed IDAT scan -> long idata DataFrame. The low-bead null-out
-    (reference samples.py:486-499) happens in ``assemble_signal``."""
-    binaries = spark.read.format("binaryFile").load(path_glob)
+    (reference samples.py:486-499) happens in ``assemble_signal``.
+
+    The glob is expanded here, by the Hadoop globber Spark itself uses,
+    and the reader gets the matched paths: handed the glob, Spark probes
+    it for a streaming sink's metadata directory and logs a WARN on every
+    read when the probe fails. A glob that matches nothing is passed on
+    unchanged, so Spark raises its usual path-not-found error."""
+    pattern = spark._jvm.org.apache.hadoop.fs.Path(path_glob)
+    fs = pattern.getFileSystem(spark._jsc.hadoopConfiguration())
+    paths = [st.getPath().toString() for st in fs.globStatus(pattern) or []]
+    binaries = spark.read.format("binaryFile").load(paths or path_glob)
 
     def _parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:

@@ -380,3 +380,40 @@ def test_concurrent_same_key_publish_loser_reads_winner(spark, tmp_path):
     assert leftovers == []
     m3 = PipelineManifest(spark, root)
     assert m3.entry(winner.key) is not None
+
+
+def _double(spark, df):
+    return df.select((F.col("id") * 2).alias("x"))
+
+
+def test_ledger_schema_falls_back_to_inference(spark, tmp_path):
+    """A ledger line written before schemas were recorded keeps its hit,
+    and so does a stage parquet rewritten in place with other columns:
+    both reads infer the schema from the files."""
+    import json
+    import shutil
+
+    root = str(tmp_path / "pl")
+    m = PipelineManifest(spark, root)
+    src = m.frame_source("src", spark.range(5), fingerprint="fp-1")
+    ref = m.stage("double", _double, [src], {})
+    assert {"schema", "listing"} <= set(m.entry(ref.key))
+    ledger = os.path.join(root, PipelineManifest._LEDGER)
+    with open(ledger) as fh:
+        lines = [json.loads(line) for line in fh]
+    with open(ledger, "w") as fh:
+        for e in lines:
+            e.pop("schema")
+            fh.write(json.dumps(e) + "\n")
+
+    m2 = PipelineManifest(spark, root)
+    src2 = m2.frame_source("src", spark.range(5), fingerprint="fp-1")
+    again = m2.stage("double", _double, [src2], {})
+    assert src2.from_cache and again.from_cache and again.key == ref.key
+    assert sorted(r["x"] for r in again.df.collect()) == [0, 2, 4, 6, 8]
+
+    ref = m.stage("double", _double, [src], {})
+    assert ref.df.columns == ["x"]
+    shutil.rmtree(ref.path)
+    spark.range(2).withColumnRenamed("id", "y").write.parquet(ref.path)
+    assert m.by_key(ref.key).df.columns == ["y"]

@@ -560,3 +560,54 @@ def test_run_pipeline_added_mask_keys_masks_by_content(spark, session, tmp_path)
     _, own = session.run_pipeline(m, source_fingerprint="idat-v1")
     assert own["masks"].key != refs["masks"].key
     assert not own["masks"].key.startswith("frm-")
+
+
+def test_run_pipeline_store_reads_use_recorded_schemas(spark, session, tmp_path):
+    """Each stage's ledger entry records the schema a Parquet read gives
+    back, and a warm run reads every stage with it: no schema-inference
+    job, so the warm run submits no Spark job at all."""
+    import json
+
+    from pyspark.sql.types import StructType
+
+    from pylluminator_spark.plans.manifest import PipelineManifest
+
+    m = PipelineManifest(spark, str(tmp_path / "pl"))
+    _cold, refs = session.run_pipeline(m, source_fingerprint="idat-v1")
+    for name, ref in refs.items():
+        recorded = StructType.fromJson(json.loads(m.entry(ref.key)["schema"]))
+        assert recorded == spark.read.parquet(ref.path).schema, name
+        assert ref.df.schema == recorded, name
+
+    sc = spark.sparkContext
+    sc.setJobGroup("warm-run-pipeline", "warm run_pipeline")
+    try:
+        _warm, warm_refs = session.run_pipeline(m, source_fingerprint="idat-v1")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert all(r.from_cache for r in warm_refs.values())
+    assert list(sc.statusTracker().getJobIdsForGroup("warm-run-pipeline")) == []
+
+
+def test_read_idat_files_reads_exactly_the_glob(spark, idat_dir, tmp_path):
+    """The reader takes the glob's own file set: ``dir/*.idat`` leaves out
+    an ``.idat`` file in a subdirectory; a one-file glob and a glob over
+    several directories read what they match."""
+    import shutil
+
+    d = tmp_path / "cohort"
+    (d / "nested").mkdir(parents=True)
+    shutil.copy(f"{idat_dir}/s01_Grn.idat", d / "s01_Grn.idat")
+    shutil.copy(f"{idat_dir}/s02_Grn.idat", d / "s02_Grn.idat")
+    shutil.copy(f"{idat_dir}/s03_Grn.idat", d / "nested" / "decoy_Grn.idat")
+
+    def samples(glob):
+        df = read_idat_files(spark, glob)
+        return sorted(r["sample"] for r in df.select("sample").distinct().collect())
+
+    assert samples(f"{d}/*.idat") == ["s01", "s02"]
+    assert samples(f"{d}/s01_*.idat") == ["s01"]
+    assert samples(f"{d}/*/*.idat") == ["decoy"]
+    with pytest.raises(Exception, match="PATH_NOT_FOUND|does not exist"):
+        read_idat_files(spark, f"{d}/*.nothing")

@@ -457,6 +457,26 @@ def test_noob_apply_codegen_stays_small(spark, signal):
     assert len(code) < 300_000, len(code)
 
 
+def test_stouffer_codegen_methods_stay_jit_compilable(spark):
+    """``stouffer_combine`` projects the shared intermediates of isf(p) and
+    of sf(Z) once each. With them inlined, the aggregate's generated code
+    is about 260 kB and one method compiles to about 8,060 bytes, over
+    HotSpot's 8,000-byte ``HugeMethodLimit``: the JIT never compiles it."""
+    from pylluminator_spark.functions.stats import stouffer_combine
+
+    df = spark.createDataFrame(
+        [(i % 7, (i % 97 + 0.5) / 100.0) for i in range(200)], "seg long, p double"
+    )
+    plan = _executed_plan(spark, stouffer_combine(df, ["seg"], "p"))
+    debug = spark._jvm.org.apache.spark.sql.execution.debug.package
+    assert len(debug.codegenString(plan)) < 150_000
+    subtrees = debug.codegenStringSeq(plan).iterator()
+    sizes = []
+    while subtrees.hasNext():
+        sizes.append(subtrees.next()._3().maxMethodCodeSize())
+    assert sizes and max(sizes) < 8_000, sizes
+
+
 def test_noob_fits_once(spark, signal):
     """NOOB joins one parameter row per sample, so its plan runs the pandas
     fit once for both channels."""
