@@ -21,8 +21,9 @@ Reference: /root/reference/pylluminator/dm.py. Spark-first decomposition:
   per-chromosome cumulative change counts + chromosome offsets — no
   single-partition window (every chromosome ends in a change point, so
   segments never span chromosomes).
-- **DMR aggregates (A13)**: groupBy(segment) with Stouffer combine as pure
-  column math (functions.stats.stouffer_combine).
+- **DMR aggregates (A13)**: groupBy(segment), and for the p-values one long
+  ``(segment, contrast)`` table: one Stouffer combine as pure column math
+  (functions.stats.stouffer_combine), one BH pass by contrast, one pivot.
 
 - **MixedLM (K9, group_column random effects, reference dm.py:61-67)**: a
   pure-numpy one-random-intercept REML fit (``mixedlm_fit_patterns``). The
@@ -538,12 +539,8 @@ def compute_dmp(
     # BH adjust per factor (reference dm.py:474-477)
     for fname in factor_names:
         dmps = bh_adjust(
-            dmps.withColumn(
-                "_p_tmp", F.col(f"`{fname}_p_value`")
-            ),
-            "_p_tmp",
-            out_col=f"{fname}_p_value_adjusted",
-        ).drop("_p_tmp")
+            dmps, f"{fname}_p_value", out_col=f"{fname}_p_value_adjusted"
+        )
     return dmps, contrasts
 
 
@@ -568,12 +565,15 @@ def compute_dmr(
     coords = genomic_ranges.select(
         "probe_id", "chromosome", "start", "end"
     ).withColumn("_chrom_order", chromosome_order_expr(F.col("chromosome")))
-    nonzero = coords.filter(F.col("end") > F.col("start"))
-
-    probe_has_value = (
-        betas.filter(F.col("beta").isNotNull()).select("probe_id").distinct()
+    # one placement table over the probes with coordinates and beta rows: a
+    # probe with a value and a non-empty range on a chromosome is placed and
+    # segmented; every other one gets an NA segment (reference dm.py:605-610)
+    has_value = betas.groupBy("probe_id").agg((F.count("beta") > 0).alias("_has_value"))
+    in_range = F.col("chromosome").isNotNull() & (F.col("end") > F.col("start"))
+    probes = coords.join(has_value, "probe_id").withColumn(
+        "_placed", F.coalesce(F.col("_has_value") & in_range, F.lit(False))
     )
-    placed = nonzero.join(probe_has_value, "probe_id", "left_semi")
+    placed = probes.filter(F.col("_placed"))
 
     # per-sample lead differences in global genome order (crossing chromosome
     # boundaries, like the reference's unpartitioned diff(-1) dm.py:569-575)
@@ -663,15 +663,8 @@ def compute_dmr(
     # is exactly the total change count (1 + offset_last + (n_last - 1)).
     last_segment_id = acc
 
-    # NA segments: probes with coordinates but no beta values / 0-width ranges
-    # get fresh ids (reference dm.py:605-610)
-    all_probes = coords.join(
-        betas.select("probe_id").distinct(), "probe_id", "left_semi"
-    )
-    na_probes = all_probes.join(
-        segmented.select("probe_id"), "probe_id", "left_anti"
-    )
-    na_probes = na_probes.persist()
+    # NA segments: the unplaced probes get fresh ids after the last one
+    na_probes = probes.filter(~F.col("_placed")).persist()
     na_segments = with_global_rank(
         na_probes, ["probe_id"], "_na_rank", n_rows=na_probes.count()
     ).withColumn(
@@ -697,22 +690,21 @@ def compute_dmr(
         agg_exprs.append(F.avg(F.col(f"`{c}`")).alias(c))
     dmr = seg_probes.groupBy("segment_id").agg(*agg_exprs)
 
-    for contrast in contrasts:
-        pcol = f"{contrast}_p_value"
-        combined = stouffer_combine(
-            seg_probes.select("segment_id", F.col(f"`{pcol}`").alias("_p")),
-            ["segment_id"],
-            "_p",
-            out_col=pcol,
-        ).select("segment_id", F.col(f"`{pcol}`").alias(f"__comb_{contrast}"))
-        dmr = dmr.join(combined, "segment_id", "left").withColumn(
-            pcol, F.col(f"`__comb_{contrast}`")
-        ).drop(f"__comb_{contrast}")
-        dmr = bh_adjust(
-            dmr.withColumn("_p_tmp", F.col(f"`{pcol}`")),
-            "_p_tmp",
-            out_col=f"{pcol}_adjusted",
-        ).drop("_p_tmp")
+    if contrasts:
+        # every contrast's p-values in one long table: one Stouffer combine
+        # per (segment, contrast) and one BH pass per contrast, pivoted back
+        # at the edge to {contrast}_p_value, {contrast}_p_value_adjusted
+        long_p = seg_probes.select("segment_id", F.inline(F.array(*[
+            F.struct(F.lit(c).alias("_contrast"), F.col(f"`{c}_p_value`").alias("_p"))
+            for c in contrasts
+        ])))
+        combined = stouffer_combine(long_p, ["segment_id", "_contrast"], "_p")
+        combined = bh_adjust(combined, "p_combined", by=["_contrast"])
+        p_values = combined.groupBy("segment_id").pivot("_contrast", contrasts).agg(
+            F.first("p_combined").alias("p_value"),
+            F.first("p_adj").alias("p_value_adjusted"),
+        )
+        dmr = dmr.join(p_values, "segment_id", "left")
 
     flagged.unpersist()
     return segments, dmr

@@ -16,6 +16,8 @@ closed-form approximations:
 
 from __future__ import annotations
 
+from collections.abc import Sequence
+
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -170,28 +172,34 @@ def norm_isf_expr(p: Column) -> Column:
     return -ndtri_expr(p)
 
 
-def bh_adjust(df: DataFrame, p_col: str, out_col: str = "p_adj") -> DataFrame:
+def bh_adjust(
+    df: DataFrame, p_col: str, out_col: str = "p_adj", by: Sequence[str] = ()
+) -> DataFrame:
     """Benjamini-Hochberg FDR adjustment (reference dm.py:475-477), with the
-    semantics of R ``p.adjust(p, "BH")``.
+    semantics of R ``p.adjust(p, "BH")``, within each group of the ``by``
+    columns (the whole frame when ``by`` is empty).
 
     ``p_adj_(i) = min(1, min_{j >= i} p_(j) * n / j)`` over the ascending
     rank ``i`` of the non-null p-values, where ``n`` counts only the
     non-null p-values. A NULL p ranks after every value, is left out of
     ``n`` and gets a NULL result. The reverse running minimum runs over
     the unique rank, so tied p-values get the same adjusted value
-    whichever rank each one draws.
+    whichever rank each one draws. ``p_col`` is a column name, not an
+    expression, so a patsy-style name such as ``f[T.level]_p_value``
+    needs no quoting.
 
-    Scale note: this is a global sort, fine for the reference's ~1M
-    probes; ``operators.ordered.bh_adjust_global`` is the range-partitioned
-    path for larger vectors.
+    Scale note: each group is one window partition, fine for the
+    reference's ~1M probes; ``operators.ordered.bh_adjust_global`` is the
+    range-partitioned path for larger vectors.
     """
-    p = F.col(p_col)
-    w_rank = Window.orderBy(p.asc_nulls_last())
-    w_rev = Window.orderBy(F.col("_bh_rank").desc()).rowsBetween(
+    p = F.col(f"`{p_col}`")
+    group = Window.partitionBy(*by)
+    w_rank = group.orderBy(p.asc_nulls_last())
+    w_rev = group.orderBy(F.col("_bh_rank").desc()).rowsBetween(
         Window.unboundedPreceding, Window.currentRow
     )
     return (
-        df.withColumn("_bh_n", F.count(p).over(Window.partitionBy()))
+        df.withColumn("_bh_n", F.count(p).over(group))
         .withColumn("_bh_rank", F.row_number().over(w_rank))
         .withColumn("_bh_raw", p * F.col("_bh_n") / F.col("_bh_rank"))
         .withColumn(
@@ -240,4 +248,4 @@ def stouffer_combine(
     return agg.withColumn(
         out_col,
         F.when(F.col("_k") <= 1, F.col("_p_first")).otherwise(combined),
-    ).drop("_z_sum", "_p_first", "_v", "_abs", "_t", "_tail")
+    ).drop("_z_sum", "_k", "_p_first", "_v", "_abs", "_t", "_tail")

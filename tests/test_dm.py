@@ -12,6 +12,8 @@ from pyspark.sql import functions as F
 from pylluminator_spark import dm
 from pylluminator_spark.functions.stats import bh_adjust
 
+from conftest import codegen_size
+
 SAMPLES = [f"s{i}" for i in range(6)]
 SHEET = pd.DataFrame(
     {
@@ -145,31 +147,50 @@ def _bh_cases():
         "nulls": np.array([0.01, 0.02, 0.03, 0.04, np.nan, np.nan]),
         "ties": ties,
         "nulls_and_ties": mixed,
+        # a patsy-style column name, as compute_dmp adjusts it
+        "bracketed_name": mixed[::-1],
     }
 
 
 @pytest.mark.parametrize("case", list(_bh_cases()))
 def test_bh_adjust_matches_numpy(spark, case):
     pvals = _bh_cases()[case]
+    p_col = "sample_type[T.case]_p_value" if case == "bracketed_name" else "p"
     df = spark.createDataFrame(
-        [(int(i), None if np.isnan(p) else float(p)) for i, p in enumerate(pvals)],
-        "id long, p double",
+        [(int(i), int(i) % 3, None if np.isnan(p) else float(p)) for i, p in enumerate(pvals)],
+        f"id long, grp long, `{p_col}` double",
     )
-    got = bh_adjust(df, "p").toPandas().set_index("id").sort_index()
+    got = bh_adjust(df, p_col).toPandas().set_index("id").sort_index()
     got_adj = got["p_adj"].to_numpy(dtype=float)
     expected = numpy_bh(pvals)
     np.testing.assert_array_equal(np.isnan(got_adj), np.isnan(pvals))
     np.testing.assert_allclose(got_adj, expected, rtol=1e-12)
+    # by=[...] adjusts each group as a separate call on that group would
+    by_grp = bh_adjust(df, p_col, by=["grp"]).toPandas().set_index("id").sort_index()
+    for g in range(3):
+        alone = bh_adjust(df.filter(F.col("grp") == g), p_col).toPandas()
+        alone = alone.set_index("id").sort_index()["p_adj"]
+        pd.testing.assert_series_equal(by_grp.loc[alone.index, "p_adj"], alone)
 
 
 def test_bh_null_p_values_from_unfit_probes(spark, dmr_inputs):
     """A probe with a single non-null beta has no fit (NULL p); a probe
     with coordinates but only NULL betas becomes an NA segment (NULL
     combined p). The adjusted p-values of compute_dmp and compute_dmr
-    must be BH over the non-null raw p-values, NULL where the raw p is."""
+    must be BH over the non-null raw p-values, NULL where the raw p is.
+
+    Placement edge cases ride along: a zero-width range, a NULL start and a
+    NULL chromosome also make NA segments, numbered after the last placed
+    segment in probe_id order; a probe with coordinates but no beta rows
+    gets no segment."""
     betas, granges = dmr_inputs
     extra = [(s, "cgX0001", 0.5 if s == "s0" else None) for s in SAMPLES]
     extra += [(s, "cgX0002", None) for s in SAMPLES]
+    extra += [
+        (s, pid, 0.3 + 0.01 * i)
+        for pid in ("cgX0003", "cgX0004", "cgX0006")
+        for i, s in enumerate(SAMPLES)
+    ]
     betas = betas.unionByName(
         betas.sparkSession.createDataFrame(
             extra, "sample string, probe_id string, beta double"
@@ -177,7 +198,14 @@ def test_bh_null_p_values_from_unfit_probes(spark, dmr_inputs):
     )
     granges = granges.unionByName(
         granges.sparkSession.createDataFrame(
-            [("cgX0001", "2", 50_000, 50_002), ("cgX0002", "2", 60_000, 60_002)],
+            [
+                ("cgX0001", "2", 50_000, 50_002),
+                ("cgX0002", "2", 60_000, 60_002),
+                ("cgX0003", "2", 70_000, 70_000),  # zero width
+                ("cgX0004", "2", None, 80_002),
+                ("cgX0005", "2", 90_000, 90_002),  # no beta rows
+                ("cgX0006", None, 95_000, 95_002),
+            ],
             "probe_id string, chromosome string, start long, end long",
         )
     )
@@ -186,8 +214,13 @@ def test_bh_null_p_values_from_unfit_probes(spark, dmr_inputs):
     dmp_pdf = dmps.toPandas().set_index("probe_id")
     assert np.isnan(dmp_pdf.loc["cgX0001", "sample_type[T.PREC]_p_value"])
     assert "cgX0002" not in dmp_pdf.index
-    seg_pdf = segments.toPandas().set_index("probe_id")
-    assert "cgX0002" in seg_pdf.index
+    seg_pdf = segments.toPandas()
+    assert seg_pdf["probe_id"].is_unique  # no probe both placed and NA
+    seg_pdf = seg_pdf.set_index("probe_id")
+    assert "cgX0005" not in seg_pdf.index
+    na = ["cgX0002", "cgX0003", "cgX0004", "cgX0006"]
+    last = seg_pdf.drop(index=na)["segment_id"].max()
+    assert seg_pdf.loc[na, "segment_id"].tolist() == [last + 1, last + 2, last + 3, last + 4]
     dmr_pdf = dmr_df.toPandas()
     assert dmr_pdf["sample_type[T.PREC]_p_value"].isna().any()
     for table in (dmp_pdf, dmr_pdf):
@@ -251,6 +284,99 @@ def test_compute_dmr_segments(spark, dmr_inputs, betas_df):
         (dmr_pdf[f"{pcol}_adjusted"].dropna() >= 0)
         & (dmr_pdf[f"{pcol}_adjusted"].dropna() <= 1)
     ).all()
+
+
+@pytest.fixture(scope="module")
+def multi_contrast_dmr(spark):
+    """Four contrasts: a 3-level factor, a 2-level factor and a covariate
+    over 12 samples; blocks of 5 probes share a level, so the probes
+    segment in fives. One probe has a single beta (NULL p), one only NULL
+    betas (an NA segment)."""
+    rng = np.random.RandomState(11)
+    samples = [f"m{i:02d}" for i in range(12)]
+    sheet = pd.DataFrame({
+        "sample": samples,
+        "grp": ["a", "b", "c"] * 4,
+        "sex": ["F"] * 6 + ["M"] * 6,
+        "age": rng.uniform(20, 70, 12).round(1),
+    })
+    rows, coords = [], []
+    for p in range(60):
+        chrom, pos = ("1", p) if p < 40 else ("2", p - 40)
+        pid = f"cg{p:05d}"
+        coords.append((pid, chrom, 1000 * pos, 1000 * pos + 2))
+        base = 0.15 + 0.6 * ((p // 5) % 2) + 0.02 * (p // 10)
+        effect = {"a": 0.0, "b": 0.03 * (p % 3), "c": 0.05 * (p % 2)}
+        for i, smp in enumerate(samples):
+            beta = float(base + effect[sheet["grp"][i]] + rng.normal(0, 0.01))
+            if pid == "cg00052" or (pid == "cg00007" and i > 0):
+                beta = None
+            rows.append((smp, pid, beta))
+    betas = spark.createDataFrame(rows, "sample string, probe_id string, beta double")
+    granges = spark.createDataFrame(
+        coords, "probe_id string, chromosome string, start long, end long"
+    )
+    dmps, contrasts = dm.compute_dmp(betas, sheet, "~ grp + sex + age")
+    segments, dmr_df = dm.compute_dmr(betas, dmps, granges, contrasts, dist_cutoff=0.1)
+    return betas, granges, dmps, contrasts, segments, dmr_df
+
+
+def _numpy_stouffer(p):
+    """Stouffer combine of the non-null ``p`` (reference dm.py:27-37)."""
+    from math import erfc, sqrt
+    from statistics import NormalDist
+
+    p = p[~np.isnan(p)]
+    if len(p) <= 1:
+        return p[0] if len(p) else np.nan
+    z = sum(-NormalDist().inv_cdf(v) for v in p) / sqrt(len(p))
+    return 0.5 * erfc(z / sqrt(2))
+
+
+def test_compute_dmr_contrasts_match_per_contrast_oracle(spark, multi_contrast_dmr):
+    """Every contrast's DMR p-value is the Stouffer combine of its probes'
+    p-values, and its adjusted p-value is BH over the segments, as if each
+    contrast were computed alone; the columns come in contrast order."""
+    betas, granges, dmps, contrasts, segments, dmr_df = multi_contrast_dmr
+    assert contrasts == ["grp[T.b]", "grp[T.c]", "sex[T.M]", "age"]
+    p_cols = [f"{c}_p_value{s}" for c in contrasts for s in ("", "_adjusted")]
+    assert dmr_df.columns[-len(p_cols):] == p_cols
+    merged = segments.toPandas().merge(dmps.toPandas(), on="probe_id", how="left")
+    got = dmr_df.toPandas().set_index("segment_id").sort_index()
+    assert got.index.is_unique and len(got) == 13  # 12 blocks + 1 NA segment
+    for c in contrasts:
+        expected = merged.groupby("segment_id")[f"{c}_p_value"].apply(
+            lambda s: _numpy_stouffer(s.to_numpy(dtype=float))
+        ).sort_index()
+        raw = got[f"{c}_p_value"].to_numpy(dtype=float)
+        adj = got[f"{c}_p_value_adjusted"].to_numpy(dtype=float)
+        np.testing.assert_array_equal(np.isnan(raw), np.isnan(expected.to_numpy()))
+        np.testing.assert_allclose(raw, expected.to_numpy(), rtol=1e-6)
+        np.testing.assert_allclose(adj, numpy_bh(raw), rtol=1e-12)
+        np.testing.assert_array_equal(np.isnan(adj), np.isnan(raw))
+    # no contrast, no p-value columns
+    _segs, bare = dm.compute_dmr(betas, dmps, granges, [], dist_cutoff=0.1)
+    assert bare.columns == dmr_df.columns[: -len(p_cols)]
+
+
+def test_compute_dmr_plan_size_does_not_grow_with_contrasts(spark, multi_contrast_dmr):
+    """One long contrast table keeps the 4-contrast dmr plan's generated code
+    near 1 MB with every method JIT-compilable. A Stouffer aggregate, join
+    and BH pass per contrast made it about 9 MB."""
+    dmr_df = multi_contrast_dmr[-1]
+    chars, method = codegen_size(spark, dmr_df)
+    assert chars < 2_000_000, chars
+    assert method < 8_000, method
+
+
+def test_stouffer_combine_returns_group_cols_and_result(spark):
+    from pylluminator_spark.functions.stats import stouffer_combine
+
+    df = spark.createDataFrame(
+        [(1, "x", 0.03, 7), (2, "x", 0.2, 7), (2, "x", 0.4, 7)],
+        "seg long, c string, p double, other long",
+    )
+    assert stouffer_combine(df, ["seg", "c"], "p", "q").columns == ["seg", "c", "q"]
 
 
 def test_stouffer_single_probe_segment_keeps_p(spark):

@@ -13,6 +13,8 @@ from pyspark.sql import functions as F
 
 from pylluminator_spark import preprocessing as pp
 
+from conftest import codegen_size, executed_plan
+
 N_T1G, N_T1R, N_T2, N_NEG, N_NORM = 60, 70, 150, 40, 10
 SAMPLES = ["sA", "sB"]
 
@@ -437,24 +439,12 @@ def test_poobah_low_signal_prior_and_missing_background(spark):
     _assert_pvalues(pvals, expected)
 
 
-def _executed_plan(spark, df):
-    """``df``'s executed plan with AQE off, so the plan is final."""
-    key = "spark.sql.adaptive.enabled"
-    prev = spark.conf.get(key)
-    spark.conf.set(key, "false")
-    try:
-        return df._jdf.queryExecution().executedPlan()
-    finally:
-        spark.conf.set(key, prev)
-
-
 def test_noob_apply_codegen_stays_small(spark, signal):
     """The NOOB apply plan projects each shared subexpression of the
     norm-exp convolution once. With them inlined, this plan's generated
     Java is about 1 MB."""
-    plan = _executed_plan(spark, pp.noob_background_correction(signal))
-    code = spark._jvm.org.apache.spark.sql.execution.debug.package.codegenString(plan)
-    assert len(code) < 300_000, len(code)
+    chars, _method = codegen_size(spark, pp.noob_background_correction(signal))
+    assert chars < 300_000, chars
 
 
 def test_stouffer_codegen_methods_stay_jit_compilable(spark):
@@ -467,18 +457,13 @@ def test_stouffer_codegen_methods_stay_jit_compilable(spark):
     df = spark.createDataFrame(
         [(i % 7, (i % 97 + 0.5) / 100.0) for i in range(200)], "seg long, p double"
     )
-    plan = _executed_plan(spark, stouffer_combine(df, ["seg"], "p"))
-    debug = spark._jvm.org.apache.spark.sql.execution.debug.package
-    assert len(debug.codegenString(plan)) < 150_000
-    subtrees = debug.codegenStringSeq(plan).iterator()
-    sizes = []
-    while subtrees.hasNext():
-        sizes.append(subtrees.next()._3().maxMethodCodeSize())
-    assert sizes and max(sizes) < 8_000, sizes
+    chars, method = codegen_size(spark, stouffer_combine(df, ["seg"], "p"))
+    assert chars < 150_000, chars
+    assert 0 < method < 8_000, method
 
 
 def test_noob_fits_once(spark, signal):
     """NOOB joins one parameter row per sample, so its plan runs the pandas
     fit once for both channels."""
-    plan = _executed_plan(spark, pp.noob_background_correction(signal)).toString()
+    plan = executed_plan(spark, pp.noob_background_correction(signal)).toString()
     assert plan.count("FlatMapGroupsInPandas") == 1, plan
