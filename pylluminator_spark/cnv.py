@@ -32,7 +32,11 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from pylluminator_spark.operators.range_join import range_join, subtract_overlaps
+from pylluminator_spark.operators.range_join import (
+    count_overlaps,
+    range_join,
+    subtract_overlaps,
+)
 from pylluminator_spark.preprocessing import total_ib_intensity
 
 TILE_WIDTH = 50_000
@@ -205,18 +209,13 @@ def make_bins(
     """Count probes per tile (bucketed range join) then merge adjacent
     low-count tiles per chromosome until each bin holds >= minimum_overlap
     probes. The merge loop runs per chromosome in a grouped-map UDF."""
-    counted = (
-        range_join(
-            tiles,
-            probe_coords.select("chromosome", "start", "end"),
-            bucket=TILE_WIDTH,
-        )
-        .groupBy("chromosome", "start", "end")
-        .agg(F.count(F.lit(1)).alias("n_probes"))
+    with_zero = count_overlaps(
+        tiles,
+        probe_coords.select("chromosome", "start", "end"),
+        ["chromosome", "start", "end"],
+        bucket=TILE_WIDTH,
+        out_col="n_probes",
     )
-    with_zero = tiles.join(
-        counted, ["chromosome", "start", "end"], "left"
-    ).withColumn("n_probes", F.coalesce("n_probes", F.lit(0)))
 
     def _merge(pdf: pd.DataFrame) -> pd.DataFrame:
         chrom = pdf["chromosome"].iloc[0]

@@ -18,9 +18,12 @@ Reference: /root/reference/pylluminator/dm.py. Spark-first decomposition:
 - **Segmentation (W1)**: per-sample windows ordered by genome position give
   lead-differences (crossing chromosome boundaries, matching the reference's
   un-partitioned ``diff(-1)`` dm.py:569-575); global segment ids come from
-  per-chromosome cumulative change counts + chromosome offsets — no
-  single-partition window (every chromosome ends in a change point, so
-  segments never span chromosomes).
+  per-chromosome cumulative change counts + chromosome offsets (every
+  chromosome ends in a change point, so segments never span chromosomes).
+  The probe axis itself — the next placed probe in genome order and the
+  NA segments' ids — is one plain window over one row per probe, like BH:
+  at EPIC scale (about 850k placed probes) that is one window partition,
+  the bound ``bh_adjust`` already accepts.
 - **DMR aggregates (A13)**: groupBy(segment), and for the p-values one long
   ``(segment, contrast)`` table: one Stouffer combine as pure column math
   (functions.stats.stouffer_combine), one BH pass by contrast, one pivot.
@@ -45,7 +48,6 @@ from pyspark.sql import functions as F
 
 from pylluminator_spark.functions.genomic import chromosome_order_expr
 from pylluminator_spark.functions.stats import bh_adjust, stouffer_combine
-from pylluminator_spark.operators.ordered import with_global_rank, with_lead
 
 
 # ---------------------------------------------------------------------------
@@ -590,19 +592,12 @@ def compute_dmr(
     per_probe = diffs.groupBy(
         "probe_id", "chromosome", "_chrom_order", "start", "end"
     ).agg(F.sum("_d2").alias("dist")).persist()
-    # one row per placed probe — bounded by the manifest (~1M for EPICv2),
-    # NOT by the fact table; the count routes with_lead: below the 100k
-    # dispatch threshold the cheap single window runs, and at manifest
-    # size the range-partitioned two-phase path sorts in parallel (no
-    # single-partition window at scale either way). lead/lag are
-    # order-exact, so both paths return identical rows.
-    n_probe_rows = per_probe.count()
 
-    flagged = with_lead(
-        per_probe,
-        ["_chrom_order", "start", "end", "probe_id"],
-        {"_next_chrom": "chromosome", "_next_probe": "probe_id"},
-        n_rows=n_probe_rows,
+    w_genome = Window.orderBy("_chrom_order", "start", "end", "probe_id")
+    flagged = per_probe.withColumn(
+        "_next_chrom", F.lead("chromosome").over(w_genome)
+    ).withColumn(
+        "_next_probe", F.lead("probe_id").over(w_genome)
     ).withColumn(
         "_last_in_chrom",
         F.col("_next_chrom").isNull() | (F.col("_next_chrom") != F.col("chromosome")),
@@ -665,11 +660,10 @@ def compute_dmr(
 
     # NA segments: the unplaced probes get fresh ids after the last one
     na_probes = probes.filter(~F.col("_placed")).persist()
-    na_segments = with_global_rank(
-        na_probes, ["probe_id"], "_na_rank", n_rows=na_probes.count()
-    ).withColumn(
-        "segment_id", (F.col("_na_rank") + F.lit(last_segment_id)).cast("long")
-    ).drop("_na_rank")
+    na_rank = F.row_number().over(Window.orderBy("probe_id"))
+    na_segments = na_probes.withColumn(
+        "segment_id", (na_rank + F.lit(last_segment_id)).cast("long")
+    )
     segments = segmented.select(
         "probe_id", "chromosome", "start", "end", "segment_id"
     ).unionByName(

@@ -43,6 +43,18 @@ def top_variance_probes(
     )
 
 
+def _top_probes(
+    betas: DataFrame, n_probes: int | None, value_col: str
+) -> DataFrame:
+    """The non-null cells of the ``n_probes`` top-variance probes (all
+    probes when ``n_probes`` is None): the input of every Gram model."""
+    data = betas.na.drop(subset=[value_col])
+    if n_probes is None:
+        return data
+    top = top_variance_probes(data, n_probes, value_col).select("probe_id")
+    return data.join(F.broadcast(top), "probe_id")
+
+
 def _gram_matrix(
     betas: DataFrame, value_col: str, center: bool = True
 ) -> tuple[np.ndarray, list[str]]:
@@ -99,34 +111,11 @@ def pca(
     mean-centered, matching sklearn's PCA. With the Gram trick, scores are
     U * sqrt(eigvals) from the eigendecomposition of G = Xc Xc^T.
     """
-    data = betas.na.drop(subset=[value_col])
-    if n_probes is not None:
-        top = top_variance_probes(data, n_probes, value_col).select("probe_id")
-        data = data.join(F.broadcast(top), "probe_id")
     # probe-centering == feature centering in the samples x probes view
-    G, samples = _gram_matrix(data, value_col)
-    eigvals, eigvecs = np.linalg.eigh(G)
-    order = np.argsort(eigvals)[::-1]
-    eigvals, eigvecs = eigvals[order], eigvecs[:, order]
-    eigvals = np.clip(eigvals, 0.0, None)
-    k = min(n_components, len(samples))
-    scores = eigvecs[:, :k] * np.sqrt(eigvals[:k])
-    # deterministic sign: largest-|.| coordinate of each PC is positive
-    for j in range(k):
-        pivot = np.argmax(np.abs(scores[:, j]))
-        if scores[pivot, j] < 0:
-            scores[:, j] = -scores[:, j]
-    total = eigvals.sum()
-    ratio = eigvals[:k] / total if total > 0 else np.zeros(k)
-    spark = betas.sparkSession
-    rows = [
-        (s, *[float(scores[i, j]) for j in range(k)])
-        for i, s in enumerate(samples)
-    ]
-    out = spark.createDataFrame(
-        rows, ["sample"] + [f"pc{j + 1}" for j in range(k)]
-    )
-    return out, ratio
+    g, samples = _gram_matrix(_top_probes(betas, n_probes, value_col), value_col)
+    scores, ratio = _eig_result(betas.sparkSession, samples, g, n_components)
+    pcs = [f"pc{j}" for j in range(1, len(scores.columns))]
+    return scores.toDF("sample", *pcs), ratio
 
 
 # ---------------------------------------------------------------------------
@@ -140,6 +129,21 @@ def pca(
 # to thousands) or the bounded n_samples x nb_probes block (FICA/FA/NMF/...,
 # bounded by nb_probes, the reference's own working set).
 # ---------------------------------------------------------------------------
+
+
+def _complete_probes(
+    data: DataFrame, n_probes: int | None, value_col: str
+) -> DataFrame:
+    """``(probe_id, _n, _var)`` of the probes with a value in every sample
+    of ``data``, limited to the ``n_probes`` top-variance ones (variance
+    desc, probe_id) unless ``n_probes`` is None."""
+    n_samples = data.select("sample").distinct().count()
+    complete = data.groupBy("probe_id").agg(
+        F.count(value_col).alias("_n"), F.var_pop(value_col).alias("_var")
+    ).filter(F.col("_n") == n_samples)
+    if n_probes is None:
+        return complete
+    return complete.orderBy(F.desc("_var"), "probe_id").limit(n_probes)
 
 
 def _collect_matrix(
@@ -156,21 +160,13 @@ def _collect_matrix(
     top-variance working set, never a full 100 TB table.
     """
     data = betas.na.drop(subset=[value_col])
-    n_samples = data.select("sample").distinct().count()
-    full = data.groupBy("probe_id").agg(
-        F.count(value_col).alias("_n"),
-        F.var_pop(value_col).alias("_var"),
-    ).filter(F.col("_n") == n_samples)
-    if n_probes is not None:
-        top = full.orderBy(F.desc("_var"), "probe_id").limit(n_probes)
-    else:
-        if full.count() > max_collect_probes:
-            raise ValueError(
-                "n_probes=None would collect an unbounded matrix; pass an "
-                f"explicit n_probes <= {max_collect_probes} for driver-side "
-                "models"
-            )
-        top = full
+    top = _complete_probes(data, n_probes, value_col)
+    if n_probes is None and top.count() > max_collect_probes:
+        raise ValueError(
+            "n_probes=None would collect an unbounded matrix; pass an "
+            f"explicit n_probes <= {max_collect_probes} for driver-side "
+            "models"
+        )
     sel = data.join(F.broadcast(top.select("probe_id", "_var")), "probe_id")
     pdf = (
         sel.groupBy("probe_id", "_var")
@@ -213,6 +209,18 @@ def _eig_scores(g: np.ndarray, k: int) -> tuple[np.ndarray, np.ndarray]:
     return _fix_signs(eigvecs[:, :k] * np.sqrt(eigvals[:k])), eigvals
 
 
+def _eig_result(
+    spark, samples: list[str], mat: np.ndarray, n_components: int
+) -> tuple[DataFrame, np.ndarray]:
+    """Scores DataFrame(sample, c1..cK) and explained-variance ratio of the
+    top ``n_components`` eigenpairs of the samples x samples ``mat``."""
+    scores, eigvals = _eig_scores(mat, n_components)
+    k = scores.shape[1]
+    total = eigvals.sum()
+    ratio = eigvals[:k] / total if total > 0 else np.zeros(k)
+    return _scores_df(spark, samples, scores), ratio
+
+
 def classical_mds(
     betas: DataFrame,
     n_components: int = 2,
@@ -229,47 +237,13 @@ def classical_mds(
     double-centering B = -J D2 J / 2 and eigendecomposition are O(n^2)
     driver work.
     """
-    data = betas.na.drop(subset=[value_col])
-    if n_probes is not None:
-        top = top_variance_probes(data, n_probes, value_col).select("probe_id")
-        data = data.join(F.broadcast(top), "probe_id")
-    g, samples = _gram_matrix(data, value_col)
+    g, samples = _gram_matrix(_top_probes(betas, n_probes, value_col), value_col)
     diag = np.diag(g)
     d2 = diag[:, None] + diag[None, :] - 2.0 * g
     n = len(samples)
     j_mat = np.eye(n) - np.ones((n, n)) / n
     b = -0.5 * j_mat @ d2 @ j_mat
-    scores, eigvals = _eig_scores(b, n_components)
-    total = eigvals.sum()
-    k = scores.shape[1]
-    ratio = eigvals[:k] / total if total > 0 else np.zeros(k)
-    return _scores_df(betas.sparkSession, samples, scores), ratio
-
-
-def truncated_svd(
-    betas: DataFrame,
-    n_components: int = 2,
-    *,
-    n_probes: int | None = 1000,
-    value_col: str = "beta",
-) -> tuple[DataFrame, np.ndarray]:
-    """TruncatedSVD scores over the CENTERED distributed Gram matrix.
-
-    TruncatedSVD itself does not center, but the reference centers the
-    betas per probe before fitting every model except LDA/NMF/MBNMF —
-    TSVD included (reference ml.py:76-80) — so on reference-prepared data
-    TSVD coincides with PCA. We mirror that: center, then eigendecompose.
-    """
-    data = betas.na.drop(subset=[value_col])
-    if n_probes is not None:
-        top = top_variance_probes(data, n_probes, value_col).select("probe_id")
-        data = data.join(F.broadcast(top), "probe_id")
-    g, samples = _gram_matrix(data, value_col, center=True)
-    scores, eigvals = _eig_scores(g, n_components)
-    k = scores.shape[1]
-    total = eigvals.sum()
-    ratio = eigvals[:k] / total if total > 0 else np.zeros(k)
-    return _scores_df(betas.sparkSession, samples, scores), ratio
+    return _eig_result(betas.sparkSession, samples, b, n_components)
 
 
 def kernel_pca(
@@ -285,10 +259,7 @@ def kernel_pca(
     linear K = X X', rbf K_ij = exp(-gamma * d2_ij) with d2 from the Gram —
     the n x n kernel is then feature-centered and eigendecomposed driver-side
     (sklearn KernelPCA semantics, deterministic)."""
-    data = betas.na.drop(subset=[value_col])
-    if n_probes is not None:
-        top = top_variance_probes(data, n_probes, value_col).select("probe_id")
-        data = data.join(F.broadcast(top), "probe_id")
+    data = _top_probes(betas, n_probes, value_col)
     g, samples = _gram_matrix(data, value_col, center=False)
     n = len(samples)
     if kernel == "linear":
@@ -304,11 +275,7 @@ def kernel_pca(
         raise ValueError(f"unsupported kernel {kernel!r} (linear|rbf)")
     one = np.ones((n, n)) / n
     kc = k_mat - one @ k_mat - k_mat @ one + one @ k_mat @ one
-    scores, eigvals = _eig_scores(kc, n_components)
-    k = scores.shape[1]
-    total = eigvals.sum()
-    ratio = eigvals[:k] / total if total > 0 else np.zeros(k)
-    return _scores_df(betas.sparkSession, samples, scores), ratio
+    return _eig_result(betas.sparkSession, samples, kc, n_components)
 
 
 def _whiten(x: np.ndarray, k: int) -> tuple[np.ndarray, np.ndarray]:
@@ -603,31 +570,24 @@ def dimensionality_reduction(
     memory-bounded equivalents of their batch models; with the distributed
     variance selection + bounded driver matrix there is no memory pressure
     to trade off, so they dispatch to the exact batch solution.
+    TSVD does not center, but the reference centers its input first
+    (reference ml.py:76-80), so on that input TSVD is PCA and runs on ``pca``.
     """
     model = model.upper()
     if model not in DR_MODELS:
         raise ValueError(f"unknown model {model!r}; known: {DR_MODELS}")
     spark = betas.sparkSession
     info: dict = {"model": model}
-    if model in ("PCA", "IPCA"):
+    if model in ("PCA", "IPCA", "TSVD"):
         scores_df, ratio = pca(
             betas, n_components, n_probes=nb_probes, value_col=value_col
         )
-        scores_df = scores_df.select(
-            "sample",
-            *[
-                F.col(c).alias(f"c{i + 1}")
-                for i, c in enumerate(scores_df.columns[1:])
-            ],
+        scores_df = scores_df.toDF(
+            "sample", *[f"c{j}" for j in range(1, len(scores_df.columns))]
         )
         info["explained_variance_ratio"] = ratio
     elif model == "MDS":
         scores_df, ratio = classical_mds(
-            betas, n_components, n_probes=nb_probes, value_col=value_col
-        )
-        info["explained_variance_ratio"] = ratio
-    elif model == "TSVD":
-        scores_df, ratio = truncated_svd(
             betas, n_components, n_probes=nb_probes, value_col=value_col
         )
         info["explained_variance_ratio"] = ratio
@@ -690,12 +650,7 @@ def sample_distance_matrix(
     ``pivot`` if a condensed matrix is needed.
     """
     data = betas.na.drop(subset=[value_col])
-    n_samples = data.select("sample").distinct().count()
-    complete = data.groupBy("probe_id").agg(
-        F.count(value_col).alias("_n"), F.var_pop(value_col).alias("_var")
-    ).filter(F.col("_n") == n_samples)
-    if n_probes is not None:
-        complete = complete.orderBy(F.desc("_var"), "probe_id").limit(n_probes)
+    complete = _complete_probes(data, n_probes, value_col)
     data = data.join(F.broadcast(complete.select("probe_id")), "probe_id")
     g, samples = _gram_matrix(data, value_col, center=False)
     diag = np.diag(g)
@@ -813,6 +768,8 @@ def metadata_correlation(
     """Pearson correlation matrix between sample-sheet columns (reference
     visualizations.py:2198): non-numeric columns are factorized (dense-rank
     encoded), then pairwise corr via exact sum aggregations — one pass.
+    Every moment of a pair is taken over the rows where both columns are
+    non-null (pandas ``DataFrame.corr`` pairwise-complete semantics).
 
     Returns long form: (col_a, col_b, corr).
     """
@@ -825,24 +782,25 @@ def metadata_correlation(
             )
         elif c in cols:
             enc = enc.withColumn(c, F.col(c).cast("double"))
+    pairs = [(a, b) for i, a in enumerate(cols) for b in cols[i:]]
     aggs = []
-    for i, a in enumerate(cols):
-        aggs.append(F.avg(a).alias(f"_m_{a}"))
-        for b in cols[i:]:
-            aggs.append(F.avg(F.col(a) * F.col(b)).alias(f"_p_{a}_{b}"))
+    for n, (a, b) in enumerate(pairs):
+        x, y = F.col(a), F.col(b)
+        both = x.isNotNull() & y.isNotNull()
+        for m, e in (("a", x), ("b", y), ("ab", x * y), ("aa", x * x), ("bb", y * y)):
+            aggs.append(F.avg(F.when(both, e)).alias(f"_{m}{n}"))
     s = enc.agg(*aggs).collect()[0]
     rows = []
-    for i, a in enumerate(cols):
-        for b in cols[i:]:
-            cov = s[f"_p_{a}_{b}"] - s[f"_m_{a}"] * s[f"_m_{b}"]
-            va = s[f"_p_{a}_{a}"] - s[f"_m_{a}"] ** 2
-            vb = s[f"_p_{b}_{b}"] - s[f"_m_{b}"] ** 2
-            corr = (
-                cov / np.sqrt(va * vb) if va > 0 and vb > 0 else float("nan")
-            )
-            rows.append((a, b, float(corr)))
-            if a != b:
-                rows.append((b, a, float(corr)))
+    for n, (a, b) in enumerate(pairs):
+        ma, mb = s[f"_a{n}"], s[f"_b{n}"]
+        corr = float("nan")  # no complete row, or a constant column
+        if ma is not None:
+            va, vb = s[f"_aa{n}"] - ma**2, s[f"_bb{n}"] - mb**2
+            if va > 0 and vb > 0:
+                corr = (s[f"_ab{n}"] - ma * mb) / np.sqrt(va * vb)
+        rows.append((a, b, float(corr)))
+        if a != b:
+            rows.append((b, a, float(corr)))
     return sheet.sparkSession.createDataFrame(rows, ["col_a", "col_b", "corr"])
 
 

@@ -75,7 +75,7 @@ _PID = "_ord_pid"
 # serializes a 600k sort onto one core (3.4 s) while the two-phase path
 # runs the per-bucket sorts in parallel (1.7 s); at tens of thousands
 # of rows the window's single task still wins on fixed cost. Dispatch is
-# result-identical for rank/lead/min (order-exact) and for running sums
+# result-identical for rank/min (order-exact) and for running sums
 # of EXACT summands (integers / integer-valued doubles — every current
 # caller), where partial sums + offsets are exact in either association.
 # A running sum over arbitrary doubles is NOT bit-stable across the
@@ -441,76 +441,6 @@ def with_running_min(
         .withColumn(out_col, F.least(F.col("_local"), F.col("_off")))
         .drop(_PID, "_local", "_off", "_v")
     )
-
-
-def with_lead(
-    df: DataFrame,
-    order_cols: list[str],
-    lead_cols: dict[str, str],
-    *,
-    num_partitions: int | None = None,
-    n_rows: int | None = None,
-) -> DataFrame:
-    """Global ``lead(1)`` of each source column in ``order_cols`` order with
-    NO single-partition window over the data (the last row overall gets
-    NULL leads).
-
-    ``lead_cols`` maps output column name -> source column name. Scale
-    path: bucket on the sort key, per-bucket ``lead``, then patch each
-    bucket's last row with the *next* non-empty bucket's first-row values
-    — an O(n)-row stats branch. The ordering columns must be non-null and
-    totally order the rows (append a unique tie-breaker), as everywhere
-    in this module.
-    """
-    if n_rows is not None and n_rows < SMALL_INPUT_ROWS:
-        w = Window.orderBy(*[F.col(c).asc() for c in order_cols])
-        out = df
-        for out_col, src in lead_cols.items():
-            out = out.withColumn(out_col, F.lead(src).over(w))
-        return out
-
-    srcs = sorted(set(lead_cols.values()))
-    d = _bucketized(df, order_cols, num_partitions)
-    w = Window.partitionBy(_PID).orderBy(*[F.col(c).asc() for c in order_cols])
-    # order cols are non-null, so a null local lead of one of them marks the
-    # bucket's last row (a legitimately-null source value does not).
-    local = d.withColumn("_at_end", F.lead(order_cols[0]).over(w).isNull())
-    for out_col, src in lead_cols.items():
-        local = local.withColumn(f"_lead_{out_col}", F.lead(src).over(w))
-    # first row (in sort order) of each bucket: min of a struct whose
-    # leading fields are the full (total) ordering key, trailing fields
-    # the source values — lexicographic struct min selects that row's
-    # values. Derived from the WINDOWED frame so the stats branch shares
-    # the _PID exchange (see with_running_sum). (dedupe: a source that
-    # IS an order column reuses its key field, so getField stays
-    # unambiguous)
-    extra = [s for s in srcs if s not in order_cols]
-    firsts = local.groupBy(_PID).agg(
-        F.min(F.struct(*order_cols, *extra)).alias("_lo")
-    )
-    # each bucket's successor-first-row values: lead(1) over the tiny
-    # stats table in bucket order (empty buckets have no stats row, so
-    # lead lands on the next NON-EMPTY bucket; NULL for the global last)
-    nxt = firsts.select(
-        F.col(_PID),
-        *[
-            F.lead(F.col("_lo").getField(c))
-            .over(Window.orderBy(_PID))
-            .alias(f"_nx_{c}")
-            for c in srcs
-        ],
-    )
-    nxt_df = F.broadcast(nxt)
-
-    out = local.join(nxt_df, _PID)
-    for out_col, src in lead_cols.items():
-        out = out.withColumn(
-            out_col,
-            F.when(F.col("_at_end"), F.col(f"_nx_{src}")).otherwise(
-                F.col(f"_lead_{out_col}")
-            ),
-        ).drop(f"_lead_{out_col}")
-    return out.drop(_PID, "_at_end", *[f"_nx_{c}" for c in srcs])
 
 
 def bh_adjust_global(

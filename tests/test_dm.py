@@ -286,6 +286,42 @@ def test_compute_dmr_segments(spark, dmr_inputs, betas_df):
     ).all()
 
 
+def test_compute_dmr_job_count(spark):
+    """``compute_dmr`` plus one collect of each result runs at most 35 Spark
+    jobs here: the probe axis is ordered by plain windows, so no count sizes
+    a dispatch to the two-phase ordered ops (38 jobs with those counts).
+    The inputs are this test's own: a ``persist`` left by another call over
+    the same plan would serve part of the work and hide jobs."""
+    rng = np.random.RandomState(5)
+    rows, coords = [], []
+    for p in range(45):
+        pid = f"cj{p:05d}"
+        chrom = None if p == 44 else str(1 + p // 15)  # one unplaced probe
+        coords.append((pid, chrom, 500 * p, 500 * p + 2))
+        for i, smp in enumerate(SAMPLES):
+            level = 0.3 + 0.4 * ((p // 6) % 2) + 0.05 * (i >= 3)
+            rows.append((smp, pid, float(level + rng.normal(0, 0.01))))
+    betas = spark.createDataFrame(rows, "sample string, probe_id string, beta double")
+    granges = spark.createDataFrame(
+        coords, "probe_id string, chromosome string, start long, end long"
+    )
+    dmps, contrasts = dm.compute_dmp(betas, SHEET, "~ sample_type")
+    sc = spark.sparkContext
+    sc.setJobGroup("compute-dmr-jobs", "compute_dmr job guard")
+    try:
+        segments, dmr_df = dm.compute_dmr(betas, dmps, granges, contrasts)
+        dmr_df.collect()
+        segs = segments.collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    n_jobs = len(sc.statusTracker().getJobIdsForGroup("compute-dmr-jobs"))
+    assert n_jobs <= 35, n_jobs
+    # the unplaced probe gets the id after the last placed segment
+    ids = {r.probe_id: r.segment_id for r in segs}
+    assert ids["cj00044"] == max(v for k, v in ids.items() if k != "cj00044") + 1
+
+
 @pytest.fixture(scope="module")
 def multi_contrast_dmr(spark):
     """Four contrasts: a 3-level factor, a 2-level factor and a covariate

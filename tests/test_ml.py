@@ -109,6 +109,27 @@ def test_metadata_correlation(spark):
     assert cm[("dose", "age")] == cm[("age", "dose")]
 
 
+def test_metadata_correlation_pairwise_complete(spark):
+    """A NULL in one column drops that row from its pairs only, like pandas
+    ``DataFrame.corr``: every moment of a pair is taken over the rows where
+    both columns have a value."""
+    pdf = pd.DataFrame(
+        {
+            "sample": [f"s{i}" for i in range(8)],
+            "a": [1.0, 2.0, None, 4.0, 5.0, 6.0, 7.0, 30.0],
+            "b": [1.1, 2.3, 2.9, 4.2, 4.8, 6.1, 7.2, 8.0],
+            "c": [3.0, 1.0, 4.0, 1.0, 5.0, 9.0, 2.0, 6.0],
+        }
+    )
+    rows = [tuple(None if pd.isna(v) else v for v in r) for r in pdf.itertuples(index=False)]
+    sheet = spark.createDataFrame(rows, "sample string, a double, b double, c double")
+    cm = {(r.col_a, r.col_b): r.corr for r in ml.metadata_correlation(sheet).collect()}
+    want = pdf.drop(columns="sample").corr()
+    for a in "abc":
+        for b in "abc":
+            assert cm[(a, b)] == pytest.approx(want.loc[a, b], abs=1e-12), (a, b)
+
+
 # ---------------------------------------------------------------------------
 # DR family (reference ml.py:14-86 model surface)
 # ---------------------------------------------------------------------------
@@ -139,9 +160,16 @@ def test_classical_mds_equals_pca_scores(betas):
 def test_truncated_svd_matches_numpy(betas):
     """Reference centers betas per probe before EVERY model except
     LDA/NMF/MBNMF — TSVD included (reference ml.py:76-80) — so the numpy
-    twin is SVD of the column-centered matrix."""
-    sdf, _ = ml.truncated_svd(betas, 3, n_probes=None)
+    twin is SVD of the column-centered matrix, and TSVD is PCA bit for bit."""
+    _info, sdf, _s, _n = ml.dimensionality_reduction(
+        betas, model="TSVD", nb_probes=None, n_components=3
+    )
     got = sdf.toPandas().sort_values("sample").set_index("sample").to_numpy()
+    _info, pdf, _s, _n = ml.dimensionality_reduction(
+        betas, model="PCA", nb_probes=None, n_components=3
+    )
+    pca = pdf.toPandas().sort_values("sample").set_index("sample").to_numpy()
+    assert got.tobytes() == pca.tobytes()
     x = _to_matrix(betas).to_numpy(dtype=float)
     x = x - x.mean(axis=0, keepdims=True)
     u, s, _ = np.linalg.svd(x, full_matrices=False)

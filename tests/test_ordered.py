@@ -11,7 +11,6 @@ from pyspark.sql.window import Window
 from pylluminator_spark.operators.ordered import (
     bh_adjust_global,
     with_global_rank,
-    with_lead,
     with_running_min,
     with_running_sum,
 )
@@ -60,7 +59,6 @@ def test_ordered_ops_leave_no_persisted_rdds(spark, values):
     with_global_rank(values, ["v", "id"], "rk", num_partitions=8).collect()
     with_running_sum(values, ["v", "id"], "w", "cs", num_partitions=8).collect()
     with_running_min(values, ["v", "id"], "w", "cm", num_partitions=8).collect()
-    with_lead(values, ["v", "id"], {"nv": "v"}, num_partitions=8).collect()
     bh_adjust_global(
         values.withColumn("p", (F.col("id") % 1000) / 1000.0),
         "p", tie_cols=["id"], num_partitions=8,
@@ -96,37 +94,6 @@ def test_running_min_matches_window(values):
     g = {r.id: r.cm for r in got.collect()}
     w = {r.id: r.cm for r in ref.collect()}
     assert all(g[k] == pytest.approx(w[k], rel=1e-12) for k in w)
-
-
-def test_with_lead_matches_window(values):
-    # source column with nulls: a null lead must mean "last row overall",
-    # never "partition boundary"
-    vals = values.withColumn(
-        "s", F.when(F.col("id") % 11 == 0, None).otherwise(F.col("w"))
-    ).withColumn("grp", (F.col("id") % 5).cast("string"))
-    got = with_lead(
-        vals, ["v", "id"], {"next_s": "s", "next_grp": "grp"}, num_partitions=8
-    )
-    w = Window.orderBy("v", "id")
-    ref = vals.withColumn("next_s", F.lead("s").over(w)).withColumn(
-        "next_grp", F.lead("grp").over(w)
-    )
-    g = {r.id: (r.next_s, r.next_grp) for r in got.collect()}
-    r_ = {r.id: (r.next_s, r.next_grp) for r in ref.collect()}
-    assert g == r_
-    # no range exchange; the data-bearing lead window is bucket-keyed
-    # (the only single-partition work is the <= n-row stats branch)
-    plan = got._jdf.queryExecution().executedPlan().toString()
-    assert "rangepartitioning" not in plan
-    assert "windowspecdefinition(_ord_pid" in plan, plan
-
-
-def test_with_lead_small_path(values):
-    got = with_lead(values, ["v", "id"], {"nx": "w"}, n_rows=5000)
-    ref = values.withColumn("nx", F.lead("w").over(Window.orderBy("v", "id")))
-    assert {r.id: r.nx for r in got.collect()} == {
-        r.id: r.nx for r in ref.collect()
-    }
 
 
 def test_global_rank_correct_on_cached_input(spark):
